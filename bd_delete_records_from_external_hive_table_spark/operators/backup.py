@@ -9,7 +9,9 @@ Two strategies, same contract as the reference:
   ``<table>_backup_<yyyyMMdd_HHmmss>`` tagged with TBLPROPERTIES
   (HiveTableBackupStrategy.java:25-57); restore via dynamic-partition
   overwrite back into the original (60-75); retention drops backup tables
-  older than N days (98-138).
+  older than N days (98-138). Candidates come from one ``SHOW TABLES ...
+  LIKE '<table>_backup_*'`` and one raw ``SHOW TBLPROPERTIES`` collect
+  each, so neither retention nor ``latest`` runs a Spark job.
 - **PathBackupStrategy** — partitioned ORC written to a filesystem path plus
   a ``_manifest.txt`` manifest (HDFSBackupStrategy.java:28-53,151-175 —
   the reference names it ``_metadata.txt``, but Spark's file index treats
@@ -106,66 +108,61 @@ class HiveTableBackupStrategy:
     def cleanup_old(self, retention_days: int, now: datetime) -> list[str]:
         """Drop backup tables older than the retention window
         (HiveTableBackupStrategy.java:98-138)."""
-        # Hive lowercases table names in the catalog; compare
-        # case-insensitively or mixed-case configs never match their
-        # own backups and retention silently stops working.
-        prefix = f"{self.config.table}_backup_".lower()
         cutoff = now - timedelta(days=retention_days)
         dropped = []
-        for t in self.spark.catalog.listTables(self.config.database):
-            if not t.name.lower().startswith(prefix):
-                continue
-            ts = _parse_backup_ts(self.spark, f"{self.config.database}.{t.name}",
-                                  t.name, prefix)
+        for name, props in self._backups():
+            ts = _backup_ts(props, name, self.config.table)
             if ts is not None and ts < cutoff:
                 self.spark.sql(
-                    f"DROP TABLE IF EXISTS {self.config.database}.{t.name}")
-                dropped.append(t.name)
+                    f"DROP TABLE IF EXISTS {self.config.database}.{name}")
+                dropped.append(name)
         return dropped
 
     def latest(self) -> BackupRef | None:
-        """Most recent backup table *of this source*, or None. One
-        SHOW TBLPROPERTIES per candidate provides timestamp, partitions,
-        and — critically — the ``backup_source`` check: a backup whose
-        recorded source is a different table is never eligible (restoring
-        it would overwrite this table with another table's rows)."""
+        """Most recent backup table *of this source*, or None. The
+        TBLPROPERTIES provide timestamp, partitions, and — critically —
+        the ``backup_source`` check: a backup whose recorded source is a
+        different table is never eligible (restoring it would overwrite
+        this table with another table's rows)."""
         cfg = self.config
-        prefix = f"{cfg.table}_backup_".lower()
         best: tuple[datetime, str, tuple[str, ...]] | None = None
-        for t in self.spark.catalog.listTables(cfg.database):
-            if not t.name.lower().startswith(prefix):
-                continue
-            qualified = f"{cfg.database}.{t.name}"
-            props: dict[str, str] = {}
-            try:
-                props = {r[0]: r[1] for r in self.spark.sql(
-                    f"SHOW TBLPROPERTIES {qualified}").collect()}
-            except Exception:  # pragma: no cover - probe best-effort
-                pass
+        for name, props in self._backups():
             source = props.get("backup_source")
             if source is not None and source != cfg.qualified_table:
                 continue
-            ts: datetime | None = None
-            if "backup_timestamp" in props:
-                try:
-                    ts = datetime.strptime(props["backup_timestamp"],
-                                           _TS_FMT)
-                except ValueError:
-                    ts = None
-            if ts is None:
-                try:
-                    ts = datetime.strptime(t.name[len(prefix):], _TS_FMT)
-                except ValueError:
-                    continue
-            if best is None or ts > best[0]:
+            ts = _backup_ts(props, name, cfg.table)
+            if ts is not None and (best is None or ts > best[0]):
                 parts = tuple(p for p in
                               props.get("backup_partitions", "").split(",")
                               if p)
-                best = (ts, qualified, parts)
+                best = (ts, f"{cfg.database}.{name}", parts)
         if best is None:
             return None
         return BackupRef(self.name, best[1], cfg.qualified_table,
                          best[2], best[0])
+
+    def _backups(self) -> list[tuple[str, dict[str, str]]]:
+        """(name, TBLPROPERTIES) of every table named like a backup of this
+        source. One ``SHOW TABLES ... LIKE`` lists them instead of fetching
+        every table's metadata; its match is case-insensitive, as it must
+        be: Hive lowercases table names, and mixed-case configs must still
+        find their own backups. Command rows are collected raw: a DataFrame
+        filter on them would launch a Spark job per backup."""
+        cfg = self.config
+        out = []
+        for row in self.spark.sql(f"SHOW TABLES IN {cfg.database} "
+                                  f"LIKE '{cfg.table}_backup_*'").collect():
+            if row.isTemporary:
+                continue
+            props: dict[str, str] = {}
+            try:
+                props = dict(self.spark.sql(
+                    f"SHOW TBLPROPERTIES {cfg.database}.{row.tableName}"
+                ).collect())
+            except Exception:  # pragma: no cover - probe best-effort
+                pass
+            out.append((row.tableName, props))
+        return out
 
     def _scan(self, partitions: list[str]) -> DataFrame:
         cfg = self.config
@@ -173,21 +170,17 @@ class HiveTableBackupStrategy:
                 .where(in_list_predicate(cfg.partition_column, partitions)))
 
 
-def _parse_backup_ts(spark: SparkSession, qualified: str, name: str,
-                     prefix: str) -> datetime | None:
+def _backup_ts(props: dict[str, str], name: str,
+               table: str) -> datetime | None:
     """Prefer the ``backup_timestamp`` TBLPROPERTY
     (HiveTableBackupStrategy.java:117-121); fall back to the name suffix."""
-    try:
-        rows = (spark.sql(f"SHOW TBLPROPERTIES {qualified}")
-                .filter("key = 'backup_timestamp'").select("value").collect())
-        if rows:
-            return datetime.strptime(rows[0][0], _TS_FMT)
-    except Exception:
-        pass
-    try:
-        return datetime.strptime(name[len(prefix):], _TS_FMT)
-    except ValueError:
-        return None
+    for text in (props.get("backup_timestamp", ""),
+                 name[len(f"{table}_backup_"):]):
+        try:
+            return datetime.strptime(text, _TS_FMT)
+        except ValueError:
+            continue
+    return None
 
 
 class PathBackupStrategy:

@@ -23,6 +23,12 @@ fewer Spark jobs than the reference's loop; at 100 TB the scan is pruned to
 candidate partitions and the criteria predicate is pushed down to the
 ORC/parquet reader (filterPushdown conf in session.py).
 
+Metastore calls on the write path are set-at-a-time too: emptied
+partitions go in ONE multi-spec ``ALTER TABLE ... DROP`` where the
+reference issues one per partition (DeletionExecutor.java:164-214); only
+the per-partition location read remains, for lack of a multi-partition
+one in the public catalog API.
+
 Deliberate deviations from reference quirks (SURVEY §2n "noted quirks"):
 the empty-retention fast path is decided **per partition** (the reference
 drops every partition in a batch when the *batch-wide* retained count is 0,
@@ -301,44 +307,51 @@ class DeletionExecutor:
         self.metrics.record_batch(batch, before, observed_retained, per_part)
 
     def drop_partitions(self, partitions: list[str]) -> list[str]:
-        """Empty-partition fast path: metadata DROP + external-dir delete
-        (DeletionExecutor.java:164-214). External tables keep their HDFS
-        directory after DROP PARTITION, so the files are removed explicitly
-        (DeletionExecutor.java:251-269)."""
+        """Empty-partition fast path: metadata DROP + external-dir delete.
+        External tables keep their directory after DROP PARTITION, so the
+        files are removed explicitly (DeletionExecutor.java:251-269).
+
+        Set-at-a-time, where the reference loops DESCRIBE + DROP per
+        partition (DeletionExecutor.java:164-214): every location is
+        resolved first, then ONE ``ALTER TABLE ... DROP IF EXISTS
+        PARTITION (a), PARTITION (b), ...`` removes them all, then each
+        directory is deleted. Hive drops the specs one by one either way,
+        so the single statement is no less atomic than the loop; a failure
+        raises before any directory is touched."""
         if not partitions:
             return []
         cfg = self.config
+        specs = [partition_spec(cfg.partition_column, p) for p in partitions]
+        locations = [self._partition_location(spec) for spec in specs]
+        self.spark.sql(
+            f"ALTER TABLE {cfg.qualified_table} DROP IF EXISTS "
+            + ", ".join(f"PARTITION ({spec})" for spec in specs))
         fs = HadoopFS(self.spark)
-        dropped = []
-        for pid in partitions:
-            spec = partition_spec(cfg.partition_column, pid)
-            location = self._partition_location(spec)
-            self.spark.sql(
-                f"ALTER TABLE {cfg.qualified_table} "
-                f"DROP IF EXISTS PARTITION ({spec})")
+        for pid, location in zip(partitions, locations):
             if location:
                 try:
                     fs.delete(location, recursive=True)
                 except Exception as exc:
                     log.warning("could not delete partition dir %s: %s",
                                 location, exc)
-            dropped.append(pid)
             audit("partition_dropped", table=cfg.qualified_table,
                   partition=pid, location=location)
-        return dropped
+        return list(partitions)
 
     def _partition_location(self, spec: str) -> str | None:
         """DESCRIBE FORMATTED ... PARTITION → Location
-        (DeletionExecutor.java:173-187)."""
+        (DeletionExecutor.java:173-187). The catalog's answer, not a path
+        derived from the layout: a partition may live anywhere. The command
+        rows are collected raw and searched in Python — a DataFrame filter
+        on them would launch a Spark job per partition. The partition's
+        Location row precedes the table's."""
         try:
-            rows = (self.spark.sql(
+            rows = self.spark.sql(
                 f"DESCRIBE FORMATTED {self.config.qualified_table} "
-                f"PARTITION ({spec})")
-                .filter(F.col("col_name") == "Location")
-                .select("data_type").collect())
-            return rows[0][0] if rows else None
+                f"PARTITION ({spec})").collect()
         except Exception:
             return None
+        return next((r[1] for r in rows if r[0] == "Location"), None)
 
 
 def _batches(items: list[str], width: int) -> list[list[str]]:

@@ -7,8 +7,10 @@ and ``DataIntegrityValidator.java``. Four post-deletion checks (C7):
 (b) sampled integrity: no sampled surviving row matches the criteria
     (DataIntegrityValidator.java:33-118 — Bernoulli sample, fraction =
     sample_size / total, short-circuit when total <= sample_size)
-(c) partition structure intact for partitions expected to survive
-    (DataIntegrityValidator.java:123-145)
+(c) partition structure intact for partitions expected to survive —
+    one ``SHOW PARTITIONS`` listing and a set-membership test, where the
+    reference probes ``SHOW PARTITIONS ... PARTITION(spec)`` once per
+    partition (DataIntegrityValidator.java:123-145)
 (d) zero rows still match the criteria (ValidationManager.java:181-194)
 
 Engine upgrades: the sample takes a fixed seed for deterministic tests
@@ -25,7 +27,8 @@ from pyspark.sql import SparkSession
 
 from ..config import EngineConfig
 from ..metrics import audit
-from ..partitions import in_list_predicate, partition_spec
+from ..partitions import in_list_predicate
+from .deletion import PartitionHandler
 
 __all__ = ["ValidationManager", "ValidationReport"]
 
@@ -118,28 +121,16 @@ class ValidationManager:
             report.record("sample_integrity", bad == 0,
                           f"sampled_matches={bad}")
 
-        # (c) partition structure intact
+        # (c) partition structure intact: one listing for all partitions
         if surviving_partitions:
-            missing = [p for p in surviving_partitions
-                       if not self._partition_exists(p)]
+            listed = set(PartitionHandler(self.spark, cfg).list_partitions())
+            missing = [p for p in surviving_partitions if p not in listed]
             report.record("partition_structure", not missing,
                           f"missing={missing}")
 
         audit("post_validation", table=cfg.qualified_table,
               passed=report.passed, checks=report.checks)
         return report
-
-    def _partition_exists(self, value: str) -> bool:
-        """SHOW PARTITIONS ... PARTITION(col='v') probe
-        (DataIntegrityValidator.java:123-145)."""
-        spec = partition_spec(self.config.partition_column, value)
-        try:
-            rows = self.spark.sql(
-                f"SHOW PARTITIONS {self.config.qualified_table} "
-                f"PARTITION ({spec})").collect()
-            return len(rows) > 0
-        except Exception:
-            return False
 
     def count_matching(self, partitions: list[str] | None = None) -> int:
         """COUNT(*) of rows the deletion would drop; ``partitions`` prunes

@@ -21,6 +21,7 @@ import logging
 import re
 from datetime import date, datetime
 from enum import Enum
+from urllib.parse import unquote
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -133,5 +134,8 @@ def partition_spec(partition_column: str, value: str) -> str:
 
 def parse_partition_value(spec: str) -> str:
     """Parse ``col=value`` from SHOW PARTITIONS output → value
-    (PartitionHandler.java:71)."""
-    return spec.split("=", 1)[1] if "=" in spec else spec
+    (PartitionHandler.java:71). SHOW PARTITIONS prints the path-escaped
+    form (``history_20260101:a`` comes back as ``history_20260101%3Aa``);
+    undo it, or the value matches no row and its partition is never
+    scanned. Hive escapes ``%`` itself, so unquoting is exact."""
+    return unquote(spec.split("=", 1)[1] if "=" in spec else spec)

@@ -220,15 +220,16 @@ def run_once(sf_dir: str, cpus: str, limit: int = 0) -> dict:
     prev_artifacts = os.environ.get("SPARK_GRAFT_ARTIFACTS")
     artifacts_dir = tempfile.mkdtemp(prefix="bd_bench_artifacts_")
     os.environ["SPARK_GRAFT_ARTIFACTS"] = artifacts_dir
-    spark = SessionFactory.create(
-        app_name="bd-engine-bench",
-        master=f"local[{cpus}]",
-        shuffle_partitions=(int(cpus) if cpus.isdigit()
-                            else (os.cpu_count() or 8)),
-    )
-    gate = wait_for_quiet_host()
-    ticks0 = _cpu_ticks()
+    spark = None
     try:
+        spark = SessionFactory.create(
+            app_name="bd-engine-bench",
+            master=f"local[{cpus}]",
+            shuffle_partitions=(int(cpus) if cpus.isdigit()
+                                else (os.cpu_count() or 8)),
+        )
+        gate = wait_for_quiet_host()
+        ticks0 = _cpu_ticks()
         warmup(spark, sf_dir)
 
         timings: dict[str, float] = {}
@@ -293,7 +294,8 @@ def run_once(sf_dir: str, cpus: str, limit: int = 0) -> dict:
             "warm_queries": warm,
         }
     finally:
-        spark.stop()
+        if spark is not None:
+            spark.stop()
         if prev_artifacts is None:
             os.environ.pop("SPARK_GRAFT_ARTIFACTS", None)
         else:

@@ -19,6 +19,7 @@ from bd_delete_records_from_external_hive_table_spark.config import DeletionCrit
 from bd_delete_records_from_external_hive_table_spark.job import DeletionJob
 from bd_delete_records_from_external_hive_table_spark.operators.backup import BackupManager
 from bd_delete_records_from_external_hive_table_spark.operators.deletion import DeletionExecutor
+from bd_delete_records_from_external_hive_table_spark.operators.validation import ValidationManager
 
 _seq = itertools.count()
 
@@ -285,14 +286,17 @@ def test_null_safe_retention_keeps_null_rows(spark, table):
     assert outcome.validation is not None and outcome.validation.passed
 
 
-def test_external_table_drop_removes_files_on_disk(spark, tmp_path):
+def test_external_table_drop_removes_files_on_disk(spark, tmp_path, caplog):
     """The reference's core case: EXTERNAL tables keep their files after
     DROP PARTITION, so the engine must delete the directory itself
-    (DeletionExecutor.java:164-214,251-269). Assert the emptied
-    partition's directory is physically gone while the untouched
-    partition's files survive."""
+    (DeletionExecutor.java:164-214,251-269). Two partitions empty in one
+    job, one of them at a custom location outside the table root: one
+    multi-spec DROP removes both, each directory is found through the
+    catalog and deleted, and the untouched partition's files survive."""
+    import logging
     import os
     loc = str(tmp_path / "ext_table")
+    elsewhere = str(tmp_path / "elsewhere" / "p12")
     name = f"test_ext_{next(_seq)}"
     spark.sql(f"""
         CREATE EXTERNAL TABLE {DB}.{name} (
@@ -301,25 +305,77 @@ def test_external_table_drop_removes_files_on_disk(spark, tmp_path):
         LOCATION '{loc}'
     """)
     try:
+        spark.sql(f"ALTER TABLE {DB}.{name} ADD PARTITION "
+                  f"(partition_id='20260212') LOCATION '{elsewhere}'")
+        seed(spark, name, partition="20260212", ids=range(21, 31))
         seed(spark, name, partition="20260213")
         seed(spark, name, partition="20260214", ids=range(11, 21))
         d13 = os.path.join(loc, "partition_id=20260213")
         d14 = os.path.join(loc, "partition_id=20260214")
         assert os.path.isdir(d13) and os.path.isdir(d14)
+        assert os.listdir(elsewhere), "custom-location partition holds data"
 
         cfg = _cfg(name, DeletionCriteria(
-            start_time=datetime(2026, 2, 13, 0, 0, 0),
+            start_time=datetime(2026, 2, 12, 0, 0, 0),
             end_time=datetime(2026, 2, 14, 0, 0, 0)))
-        outcome = DeletionJob(spark, cfg).run()
+        with caplog.at_level(logging.INFO, logger="bd_engine.audit"):
+            outcome = DeletionJob(spark, cfg).run()
         assert outcome.success, outcome.error
-        assert outcome.result.partitions_dropped == ["20260213"]
+        assert outcome.result.partitions_dropped == ["20260212", "20260213"]
 
         assert not os.path.exists(d13), "external partition dir must be deleted"
+        assert not os.path.exists(elsewhere), \
+            "custom-location partition dir must be deleted"
         assert os.path.isdir(d14) and os.listdir(d14), \
             "untouched partition files must survive"
         assert spark.table(f"{DB}.{name}").count() == 10
+        drops = [m for m in caplog.messages
+                 if m.startswith("partition_dropped ")]
+        assert len(drops) == 2
+        assert any('"20260212"' in m and elsewhere in m for m in drops)
+        assert any('"20260213"' in m for m in drops)
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {DB}.{name}")
+
+
+def seed_escaped(spark, table: str) -> None:
+    """Partition ``history_20260101:a`` (ids 1, 2), whose value Hive
+    path-escapes in SHOW PARTITIONS, and ``20260102`` (ids 3, 4)."""
+    for pid, ids in (("history_20260101:a", (1, 2)), ("20260102", (3, 4))):
+        rows = ", ".join(f"({i}, 'User{i}', 'ACTIVE', "
+                         f"TIMESTAMP '2026-01-01 09:00:00')" for i in ids)
+        spark.sql(f"INSERT INTO {DB}.{table} PARTITION (partition_id='{pid}') "
+                  f"VALUES {rows}")
+
+
+def test_delete_reaches_partition_with_escaped_value(spark, table):
+    """SHOW PARTITIONS prints ``history_20260101%3Aa``; the listing must
+    unescape it or that partition never enters the IN-list and its
+    matching row silently survives a successful run."""
+    seed_escaped(spark, table)
+    cfg = _cfg(table, DeletionCriteria(where_clause="id IN (1, 3)"))
+    outcome = DeletionJob(spark, cfg).run()
+    assert outcome.success, outcome.error
+    assert outcome.result.deleted == 2
+    assert remaining_ids(spark, table) == [2, 4]
+    assert outcome.validation.checks["partition_structure"]
+
+
+def test_post_validation_structure_check_fails_closed(spark, table):
+    """Check (c) reads one partition listing: a surviving partition the
+    metastore does not list fails the check and is named; one whose
+    value is path-escaped in the listing passes."""
+    seed_escaped(spark, table)
+    validator = ValidationManager(spark, _cfg(
+        table, DeletionCriteria(where_clause="id = 99")))
+    ok = validator.validate_post_deletion(
+        None, ["history_20260101:a", "20260102"])
+    assert ok.checks["partition_structure"], ok.details
+    bad = validator.validate_post_deletion(
+        None, ["history_20260101:a", "20991231"])
+    assert bad.checks["partition_structure"] is False
+    assert not bad.passed
+    assert bad.details["partition_structure"] == "missing=['20991231']"
 
 
 def test_count_reconciliation_invariant(spark, table):
@@ -389,6 +445,36 @@ def test_path_backup_round_trip_with_manifest_and_retention(spark, table,
     assert len(removed) == 1 and "backup_20260201" in removed[0]
     assert not os.path.exists(old_dir)
     assert mgr.strategy.backup_count(ref) == 10  # fresh backup intact
+
+
+def test_hive_backup_retention_drops_only_old_own_backups(spark):
+    """Hive-table retention (HiveTableBackupStrategy.java:98-138): with a
+    mixed-case configured table name, a backup older than
+    ``backup_retention_days`` is dropped, while a newer backup and
+    another table's backup are kept (Hive lowercases the stored names,
+    so the listing must match case-insensitively)."""
+    name = f"Test_Retention_{next(_seq)}"
+    other = f"{name}x_backup_20260101_000000"
+    spark.sql(f"CREATE TABLE {DB}.{name} (id BIGINT) "
+              f"PARTITIONED BY (partition_id STRING) STORED AS ORC")
+    spark.sql(f"CREATE TABLE {DB}.{other} (id BIGINT) STORED AS ORC")
+    try:
+        spark.sql(f"INSERT INTO {DB}.{name} PARTITION "
+                  f"(partition_id='20260213') VALUES (1), (2)")
+        mgr = BackupManager(spark, _cfg(
+            name, DeletionCriteria(where_clause="id = 1"),
+            backup_enabled=True, backup_retention_days=7))
+        old = mgr.create_backup(["20260213"], now=datetime(2026, 2, 1))
+        new = mgr.create_backup(["20260213"], now=datetime(2026, 2, 12))
+        removed = mgr.cleanup_old_backups(now=datetime(2026, 2, 13))
+        assert removed == [old.ref.split(".", 1)[1].lower()]
+        assert not spark.catalog.tableExists(old.ref)
+        assert spark.catalog.tableExists(new.ref)
+        assert spark.catalog.tableExists(f"{DB}.{other}")
+    finally:
+        for t in spark.catalog.listTables(DB):
+            if t.name.startswith(name.lower()):
+                spark.sql(f"DROP TABLE IF EXISTS {DB}.{t.name}")
 
 
 def test_job_with_backup_and_cleanup(spark, table):

@@ -22,6 +22,15 @@ from bd_delete_records_from_external_hive_table_spark.partitions import (
     sort_chronologically,
 )
 
+# the characters Hive path-escapes as %XX (FileUtils.escapePathName)
+_HIVE_ESCAPED = {chr(c) for c in range(1, 0x20)} | set('"#%\'*/:=?\\\x7f{[]^')
+
+
+def _hive_escape(value: str) -> str:
+    return "".join(f"%{ord(c):02X}" if c in _HIVE_ESCAPED else c
+                   for c in value)
+
+
 dates = st.dates(min_value=date(1900, 1, 1), max_value=date(2100, 12, 31))
 suffixes = st.integers(min_value=0, max_value=99)
 
@@ -97,8 +106,10 @@ def test_sort_is_chronological_permutation(pids):
 def test_partition_spec_roundtrips_through_parse(value):
     spec = partition_spec("partition_id", value)
     assert spec.startswith("partition_id='")
-    # SHOW PARTITIONS emits col=value; parse takes everything after '='
-    assert parse_partition_value(f"partition_id={value}") == value
+    # SHOW PARTITIONS emits col=<path-escaped value>; parse takes
+    # everything after '=' and undoes the escaping
+    assert parse_partition_value(
+        f"partition_id={_hive_escape(value)}") == value
 
 
 @given(st.sampled_from([";", "--", "/*", "*/", "drop ", "truncate ",

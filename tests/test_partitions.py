@@ -72,3 +72,9 @@ def test_partition_spec_and_parse_value():
     assert partition_spec("p", "o'brien") == "p='o''brien'"
     assert parse_partition_value("partition_id=20260213") == "20260213"
     assert parse_partition_value("bare") == "bare"
+
+
+def test_parse_partition_value_undoes_hive_path_escaping():
+    assert parse_partition_value(
+        "partition_id=history_20260101%3Aa") == "history_20260101:a"
+    assert parse_partition_value("p=50%25%2Fx") == "50%/x"
