@@ -139,10 +139,6 @@ class EngineConfig:
     auto_recovery: bool = True
     max_retries: int = 3
 
-    # performance (C2)
-    partition_parallelism: int = 10   # partitions per delete batch
-    batch_size: int = 1_000_000       # declared in the reference, never consumed
-
     dry_run: bool = False
     #: engine extension: retain rows where the predicate evaluates to NULL
     null_safe_retention: bool = False
@@ -162,8 +158,6 @@ class EngineConfig:
         if (self.backup_enabled and self.backup_strategy == "path"
                 and not self.backup_location):
             raise CriteriaValidationError("path backup strategy needs backup_location")
-        if self.partition_parallelism < 1:
-            raise CriteriaValidationError("partition_parallelism must be >= 1")
         if self.validation_tolerance_pct < 0:
             raise CriteriaValidationError("validation tolerance must be >= 0")
 
@@ -175,7 +169,10 @@ class EngineConfig:
 # -- properties-file loading (JobConfig.java:274-306) ------------------------
 
 #: properties key → (EngineConfig field, parser). Mirrors
-#: src/main/resources/application.properties:13-32.
+#: src/main/resources/application.properties:13-32, except
+#: ``partition.parallelism`` and ``batch.size``: the engine rewrites in one
+#: pass and the reference never reads ``batch.size``, so both are ignored
+#: like any other unknown key.
 _PROPERTY_KEYS = {
     "backup.strategy": ("backup_strategy",
                         lambda v: "path" if v == "hdfs" else v),
@@ -187,8 +184,6 @@ _PROPERTY_KEYS = {
     "validation.tolerance.percent": ("validation_tolerance_pct", float),
     "recovery.auto.enabled": ("auto_recovery", lambda v: v.lower() == "true"),
     "recovery.max.retries": ("max_retries", int),
-    "partition.parallelism": ("partition_parallelism", int),
-    "batch.size": ("batch_size", int),
     "dry.run.enabled": ("dry_run", lambda v: v.lower() == "true"),
 }
 

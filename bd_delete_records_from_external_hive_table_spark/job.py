@@ -62,20 +62,9 @@ class DeletionJob:
         try:
             # 1. identify affected partitions (single-scan analysis)
             plan = self.handler.analyze()
-            affected = plan.affected
-            if not affected and not any(m < 0 for _, m in plan.counts.values()):
+            if not plan.affected and not plan.probe_failed:
                 log.info("no partitions affected; nothing to delete")
-                if cfg.dry_run:
-                    result = self.executor.dry_run(plan)
-                else:
-                    # a REAL run that found nothing: report a real result,
-                    # not a dry-run one (no dry_run metrics/audit event)
-                    result = DeletionResult(
-                        deleted=0, retained=0, partitions_rewritten=[],
-                        partitions_dropped=[], dry_run=False,
-                        metrics=self.metrics)
-                    audit("deletion_executed", table=cfg.qualified_table,
-                          deleted=0, retained=0, dropped=[], rewritten=[])
+                result = self.executor.execute(plan)
                 self.metrics.finish(True)
                 return JobOutcome(True, result, None, None, self.metrics)
 
@@ -84,18 +73,14 @@ class DeletionJob:
             if not pre.passed:
                 raise RuntimeError(f"pre-validation failed: {pre.details}")
 
-            # When the probe failed, the executor conservatively rewrites
-            # EVERY candidate (counts are the (-1,-1) sentinel) — so the
-            # backup must cover every candidate too, and count-based
-            # expectations are unknowable.
-            probe_failed = any(m < 0 for _, m in plan.counts.values())
-            backup_set = plan.candidates if probe_failed else affected
-
-            # 3. backup the partitions the executor may touch; the plan's
-            # totals spare the backup validation its own source scan
-            # (unknown when the probe failed)
-            if cfg.backup_enabled and not cfg.dry_run and backup_set:
-                expected = None if probe_failed else sum(
+            # 3. backup the partitions the executor may touch: EVERY
+            # candidate when the probe failed (sentinel counts, no
+            # expected row count). Otherwise the plan's totals spare the
+            # backup validation its own source scan.
+            if cfg.backup_enabled and not cfg.dry_run:
+                backup_set = (plan.candidates if plan.probe_failed
+                              else plan.affected)
+                expected = None if plan.probe_failed else sum(
                     plan.counts[p][0] for p in backup_set)
                 backup_ref = self.backups.create_backup(
                     backup_set, expected_count=expected)
@@ -115,12 +100,8 @@ class DeletionJob:
             # 117-123 runs three full counts here; the plan aggregation
             # subsumes them). Computed after execute() so the repaired
             # counts are used when the original probe failed.
-            if any(t < 0 for t, _ in plan.counts.values()):
-                expected_retained_affected = None  # probe never recovered
-            else:
-                before_affected = sum(t for t, _ in plan.counts.values())
-                expected_retained_affected = \
-                    before_affected - plan.would_delete
+            before_affected = sum(t for t, _ in plan.counts.values())
+            expected_retained_affected = before_affected - plan.would_delete
 
             # 6. post-validation — plan.affected is re-read here because
             # execute() repairs sentinel counts in place on the

@@ -3,12 +3,19 @@
 Re-expression of ``/root/reference/.../backup/`` (BackupManager.java,
 BackupStrategy.java, HiveTableBackupStrategy.java, HDFSBackupStrategy.java).
 
-Two strategies, same contract as the reference:
+:class:`BackupManager` owns everything the two strategies share: the one
+partition-scoped source scan a backup copies, its count validation, and
+the restore — a dynamic-partition overwrite of the source from the backup
+(HiveTableBackupStrategy.java:60-75, HDFSBackupStrategy.java:56-73) whose
+row count is ``observe()``d during the write, where the reference re-counts
+with a second backup scan (HiveTableBackupStrategy.java:81,
+HDFSBackupStrategy.java:83). A strategy keeps only what differs: where
+``create`` writes the copy, how ``read`` loads it, ``cleanup_old`` and
+``latest``.
 
 - **HiveTableBackupStrategy** — ``saveAsTable`` a partitioned ORC clone named
   ``<table>_backup_<yyyyMMdd_HHmmss>`` tagged with TBLPROPERTIES
-  (HiveTableBackupStrategy.java:25-57); restore via dynamic-partition
-  overwrite back into the original (60-75); retention drops backup tables
+  (HiveTableBackupStrategy.java:25-57); retention drops backup tables
   older than N days (98-138). Candidates come from one ``SHOW TABLES ...
   LIKE '<table>_backup_*'`` and one raw ``SHOW TBLPROPERTIES`` collect
   each, so neither retention nor ``latest`` runs a Spark job.
@@ -17,9 +24,12 @@ Two strategies, same contract as the reference:
   the reference names it ``_metadata.txt``, but Spark's file index treats
   names starting with ``_metadata`` as parquet summary files and would
   feed it to the ORC reader; ``_manifest`` stays properly hidden);
-  restore reads the ORC back (56-73); retention deletes old dirs by
-  modification time (100-129).
+  retention deletes old dirs by modification time (100-129).
 
+Backup names have one-second resolution, so both strategies write with
+``mode("errorifexists")``: a second backup in the same second raises
+:class:`BackupError` before anything is written, instead of silently
+replacing the earlier backup's pre-image (the reference overwrites).
 Timestamps for backup naming are injected (``now``) rather than read from a
 global clock so tests are deterministic.
 """
@@ -30,6 +40,7 @@ import logging
 from dataclasses import dataclass
 from datetime import datetime, timedelta
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -74,11 +85,11 @@ class HiveTableBackupStrategy:
         return (f"{self.config.database}."
                 f"{self.config.table}_backup_{now.strftime(_TS_FMT)}")
 
-    def create(self, partitions: list[str], now: datetime) -> BackupRef:
+    def create(self, source: DataFrame, partitions: list[str],
+               now: datetime) -> BackupRef:
         cfg = self.config
         name = self._backup_table(now)
-        df = self._scan(partitions)
-        (df.write.mode("overwrite").format("orc")
+        (source.write.mode("errorifexists").format("orc")
            .partitionBy(cfg.partition_column).saveAsTable(name))
         parts_csv = ",".join(partitions).replace("'", "")
         self.spark.sql(
@@ -89,21 +100,8 @@ class HiveTableBackupStrategy:
         return BackupRef(self.name, name, cfg.qualified_table,
                          tuple(partitions), now)
 
-    def restore(self, ref: BackupRef) -> int:
-        """Dynamic-partition overwrite of the original from the backup
-        (HiveTableBackupStrategy.java:60-75). The restored-row count is
-        observe()d during the write — the reference pays a second backup
-        scan for it (HiveTableBackupStrategy.java:81)."""
-        df = self.spark.table(ref.ref)
-        cols = self.spark.table(ref.source_table).columns
-        obs = Observation()
-        (df.select(*cols)
-         .observe(obs, F.count(F.lit(1)).alias("rows"))
-         .write.mode("overwrite").insertInto(ref.source_table))
-        return int(obs.get["rows"])
-
-    def backup_count(self, ref: BackupRef) -> int:
-        return self.spark.table(ref.ref).count()
+    def read(self, ref: BackupRef) -> DataFrame:
+        return self.spark.table(ref.ref)
 
     def cleanup_old(self, retention_days: int, now: datetime) -> list[str]:
         """Drop backup tables older than the retention window
@@ -164,11 +162,6 @@ class HiveTableBackupStrategy:
             out.append((row.tableName, props))
         return out
 
-    def _scan(self, partitions: list[str]) -> DataFrame:
-        cfg = self.config
-        return (self.spark.table(cfg.qualified_table)
-                .where(in_list_predicate(cfg.partition_column, partitions)))
-
 
 def _backup_ts(props: dict[str, str], name: str,
                table: str) -> datetime | None:
@@ -198,12 +191,11 @@ class PathBackupStrategy:
         return (f"{self.config.backup_location.rstrip('/')}/"
                 f"{self.config.table}_backup_{now.strftime(_TS_FMT)}")
 
-    def create(self, partitions: list[str], now: datetime) -> BackupRef:
+    def create(self, source: DataFrame, partitions: list[str],
+               now: datetime) -> BackupRef:
         cfg = self.config
         path = self._backup_path(now)
-        df = (self.spark.table(cfg.qualified_table)
-              .where(in_list_predicate(cfg.partition_column, partitions)))
-        (df.write.mode("overwrite").format("orc")
+        (source.write.mode("errorifexists").format("orc")
            .partitionBy(cfg.partition_column).save(path))
         manifest = "\n".join([
             f"source_table={cfg.qualified_table}",
@@ -214,19 +206,8 @@ class PathBackupStrategy:
         return BackupRef(self.name, path, cfg.qualified_table,
                          tuple(partitions), now)
 
-    def restore(self, ref: BackupRef) -> int:
-        """Restore count observe()d during the write — one backup scan,
-        not two (HDFSBackupStrategy.java:83 re-counts)."""
-        df = self.spark.read.format("orc").load(ref.ref)
-        cols = self.spark.table(ref.source_table).columns
-        obs = Observation()
-        (df.select(*cols)
-         .observe(obs, F.count(F.lit(1)).alias("rows"))
-         .write.mode("overwrite").insertInto(ref.source_table))
-        return int(obs.get["rows"])
-
-    def backup_count(self, ref: BackupRef) -> int:
-        return self.spark.read.format("orc").load(ref.ref).count()
+    def read(self, ref: BackupRef) -> DataFrame:
+        return self.spark.read.format("orc").load(ref.ref)
 
     def cleanup_old(self, retention_days: int, now: datetime) -> list[str]:
         """Delete backup dirs whose modification time predates the cutoff
@@ -298,12 +279,17 @@ class BackupManager:
             raise BackupError("no partitions to back up")
         now = now or datetime.now()
         cfg = self.config
-        source_count = expected_count if expected_count is not None else (
-            self.spark.table(cfg.qualified_table)
-            .where(in_list_predicate(cfg.partition_column, partitions))
-            .count())
-        ref = self.strategy.create(partitions, now)
-        backup_count = self.strategy.backup_count(ref)
+        source = (self.spark.table(cfg.qualified_table)
+                  .where(in_list_predicate(cfg.partition_column, partitions)))
+        source_count = (expected_count if expected_count is not None
+                        else source.count())
+        try:
+            ref = self.strategy.create(source, partitions, now)
+        except AnalysisException as exc:
+            # errorifexists: a backup taken in the same second already
+            # holds this name; nothing was written
+            raise BackupError(f"backup not created: {exc}") from exc
+        backup_count = self.backup_count(ref)
         if backup_count != source_count:
             raise BackupError(
                 f"backup validation failed: source={source_count} "
@@ -313,9 +299,19 @@ class BackupManager:
         return ref
 
     def restore(self, ref: BackupRef) -> int:
-        restored = self.strategy.restore(ref)
+        """Dynamic-partition overwrite of the source from the backup; the
+        restored-row count is observe()d during the write."""
+        cols = self.spark.table(ref.source_table).columns
+        obs = Observation()
+        (self.strategy.read(ref).select(*cols)
+         .observe(obs, F.count(F.lit(1)).alias("rows"))
+         .write.mode("overwrite").insertInto(ref.source_table))
+        restored = int(obs.get["rows"])
         audit("backup_restored", ref=ref.ref, rows=restored)
         return restored
+
+    def backup_count(self, ref: BackupRef) -> int:
+        return self.strategy.read(ref).count()
 
     def latest_backup(self) -> BackupRef | None:
         """Most recent backup for the configured table under the

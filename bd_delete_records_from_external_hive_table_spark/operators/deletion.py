@@ -21,7 +21,17 @@ partitions (matches == total → metadata-only DROP, no rewrite), and exact
 per-partition delete counts for metrics. At 10k partitions this is ~10k×
 fewer Spark jobs than the reference's loop; at 100 TB the scan is pruned to
 candidate partitions and the criteria predicate is pushed down to the
-ORC/parquet reader (filterPushdown conf in session.py).
+ORC/parquet reader (filterPushdown conf in session.py). The same
+aggregation (:meth:`PartitionHandler.partition_counts`) repairs a plan
+whose probe failed, for both the real run and the dry run.
+
+The rewrite is ONE dynamic-partition overwrite of every partially
+matching partition; the reference runs sequential batches of
+``partition.parallelism`` (DeletionExecutor.java:235-244), a key the
+engine accepts and ignores. Spark sorts by the partition column before a
+dynamic-partition write, so a task keeps one open writer however many
+partitions the job covers, and the one job commits once: there is no
+batch k failing after batches 1..k-1 committed.
 
 Metastore calls on the write path are set-at-a-time too: emptied
 partitions go in ONE multi-spec ``ALTER TABLE ... DROP`` where the
@@ -42,7 +52,7 @@ from __future__ import annotations
 import logging
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import EngineConfig
@@ -89,6 +99,11 @@ class PartitionPlan:
     def would_delete(self) -> int:
         return sum(m for _, m in self.counts.values())
 
+    @property
+    def probe_failed(self) -> bool:
+        """The counts are the conservative ``(-1, -1)`` sentinel."""
+        return any(t < 0 for t, _ in self.counts.values())
+
 
 @dataclass
 class DeletionResult:
@@ -124,30 +139,34 @@ class PartitionHandler:
                 parts, self.config.partition_start, self.config.partition_end)
         return sort_chronologically(parts)
 
+    def partition_counts(self, partitions: list[str]) -> dict[str, tuple[int, int]]:
+        """``{partition: (total rows, rows the rewrite drops)}`` from one
+        partition-pruned aggregation; partitions without rows are absent.
+        Raises on failure. The delete-set is counted with
+        ``deletion_column`` (NULL-of-P rows are dropped by the default
+        retention scan, so P alone would under-count and break
+        reconciliation)."""
+        cfg = self.config
+        pcol = cfg.partition_column
+        pred = cfg.criteria.deletion_column(cfg.null_safe_retention)
+        rows = (self.spark.table(cfg.qualified_table)
+                .where(in_list_predicate(pcol, partitions))
+                .groupBy(pcol)
+                .agg(F.count(F.lit(1)).alias("total"),
+                     F.count(F.when(pred, 1)).alias("matches"))
+                .collect())
+        return {r[pcol]: (r["total"], r["matches"]) for r in rows}
+
     def analyze(self) -> PartitionPlan:
         """Single-scan replacement for the reference's per-partition COUNT
         loop (PartitionHandler.java:102-123). On failure, conservatively
         treats every candidate as affected (PartitionHandler.java:118-122)."""
-        cfg = self.config
         candidates = self.candidate_partitions()
         plan = PartitionPlan(candidates=candidates)
         if not candidates:
             return plan
-        # count the rows the rewrite will actually drop (NULL-of-P rows
-        # are dropped by the default retention scan, so P alone would
-        # under-count and break reconciliation)
-        pred = cfg.criteria.deletion_column(cfg.null_safe_retention)
-        pcol = cfg.partition_column
         try:
-            rows = (
-                self.spark.table(cfg.qualified_table)
-                .where(in_list_predicate(pcol, candidates))
-                .groupBy(pcol)
-                .agg(F.count(F.lit(1)).alias("total"),
-                     F.count(F.when(pred, 1)).alias("matches"))
-                .collect()
-            )
-            plan.counts = {r[pcol]: (r["total"], r["matches"]) for r in rows}
+            plan.counts = self.partition_counts(candidates)
         except Exception as exc:  # conservative inclusion
             log.warning("partition probe failed (%s); conservatively "
                         "including all %d candidates", exc, len(candidates))
@@ -170,22 +189,10 @@ class DeletionExecutor:
     def dry_run(self, plan: PartitionPlan | None = None) -> DeletionResult:
         """Report would-delete counts without writing (C4,
         DeletionExecutor.java:77-107)."""
-        plan = plan or self.handler.analyze()
+        plan = self._repair(plan or self.handler.analyze())
         self.metrics.dry_run = True
-        if any(t < 0 for t, _ in plan.counts.values()):
-            # probe failed (sentinel counts): measure directly — dry run is
-            # read-only, so the extra scan is the whole point
-            cfg = self.config
-            scoped = (self.spark.table(cfg.qualified_table)
-                      .where(in_list_predicate(cfg.partition_column,
-                                               plan.candidates)))
-            total = scoped.count()
-            deleted = scoped.where(
-                cfg.criteria.deletion_column(cfg.null_safe_retention)).count()
-            retained = total - deleted
-        else:
-            deleted = plan.would_delete
-            retained = sum(t for t, _ in plan.counts.values()) - deleted
+        deleted = plan.would_delete
+        retained = sum(t for t, _ in plan.counts.values()) - deleted
         audit("dry_run", table=self.config.qualified_table,
               would_delete=deleted, affected=plan.affected)
         return DeletionResult(deleted=deleted, retained=retained,
@@ -193,39 +200,17 @@ class DeletionExecutor:
                               dry_run=True, metrics=self.metrics)
 
     def execute(self, plan: PartitionPlan | None = None) -> DeletionResult:
-        """Run the deletion: DROP fully-emptied partitions, rewrite the rest
-        in batches of ``partition_parallelism`` (C2/C3)."""
+        """Run the deletion: DROP fully-emptied partitions, then rewrite the
+        partially matching ones in one dynamic-overwrite pass (C2/C3)."""
         cfg = self.config
         plan = plan or self.handler.analyze()
         if cfg.dry_run:
             return self.dry_run(plan)
-
-        if any(t < 0 for t, _ in plan.counts.values()):
-            # Probe failed (sentinel counts). Rewrite-only would be WRONG
-            # for a partition whose rows ALL match: its retention scan is
-            # empty, and dynamic-partition overwrite writes nothing for a
-            # partition absent from the data — the matching rows would
-            # silently survive. Repair the plan with one scan counting
-            # (total, retained) per candidate; if this scan also fails,
-            # the exception aborts the job BEFORE any mutation.
-            pcol = cfg.partition_column
-            keep = cfg.criteria.retention_column(cfg.null_safe_retention)
-            rows = (self.spark.table(cfg.qualified_table)
-                    .where(in_list_predicate(pcol, plan.candidates))
-                    .groupBy(pcol)
-                    .agg(F.count(F.lit(1)).alias("total"),
-                         F.count(F.when(keep, 1)).alias("retained"))
-                    .collect())
-            plan.counts = {r[pcol]: (r["total"], r["total"] - r["retained"])
-                           for r in rows}
-        to_drop = plan.to_drop
-        to_rewrite = plan.to_rewrite
-
-        dropped = self.drop_partitions(to_drop)
-        rewritten: list[str] = []
-        for batch in _batches(to_rewrite, cfg.partition_parallelism):
-            self._rewrite_batch(batch, plan)
-            rewritten.extend(batch)
+        self._repair(plan)
+        dropped = self.drop_partitions(plan.to_drop)
+        rewritten = plan.to_rewrite
+        if rewritten:
+            self._rewrite(rewritten, plan)
 
         for pid in dropped:
             _total, matches = plan.counts[pid]
@@ -243,6 +228,17 @@ class DeletionExecutor:
 
     # -- internals ----------------------------------------------------------
 
+    def _repair(self, plan: PartitionPlan) -> PartitionPlan:
+        """Replace probe-failed sentinel counts, in place, with real ones.
+        Rewrite-only would be WRONG for a partition whose rows ALL match:
+        its retention scan is empty, and dynamic-partition overwrite writes
+        nothing for a partition absent from the data — the matching rows
+        would silently survive. If this scan fails too, the exception
+        aborts the job BEFORE any mutation."""
+        if plan.probe_failed:
+            plan.counts = self.handler.partition_counts(plan.candidates)
+        return plan
+
     def retention_scan(self, partitions: list[str]) -> DataFrame:
         """``SELECT * WHERE pcol IN (...) AND NOT(criteria)`` — the
         copy-on-write read (DeletionExecutor.java:153-157). Declarative, so
@@ -253,58 +249,50 @@ class DeletionExecutor:
                 .where(in_list_predicate(cfg.partition_column, partitions))
                 .where(cfg.criteria.retention_column(cfg.null_safe_retention)))
 
-    def _rewrite_batch(self, batch: list[str], plan: PartitionPlan) -> None:
-        """Dynamic-partition overwrite of one batch (DeletionExecutor.java:
-        215-222). NO ``partitionBy`` on insertInto — the table's partition
-        spec governs (reference constraint, TEST_FIX.md:16-41).
+    def _rewrite(self, partitions: list[str], plan: PartitionPlan) -> None:
+        """One dynamic-partition overwrite of every listed partition
+        (DeletionExecutor.java:215-222, without the reference's batching
+        at 235-244). NO ``partitionBy`` on insertInto — the table's
+        partition spec governs (reference constraint, TEST_FIX.md:16-41).
 
         The retained row count is collected with ``observe()`` DURING the
         write pass — a free accumulator-backed metric, no extra scan (the
         reference re-counts with a second job, DeletionExecutor.java:158).
         It is also the write-TIME truth: ``plan.counts`` was measured at
-        analyze time, so a divergence means the partition changed in
+        analyze time, so a divergence means a partition changed in
         between (concurrent writer) and reconciliation must use the
         observed value, not the stale plan."""
-        from pyspark.sql import Observation
-
         cfg = self.config
-        retained_df = self.retention_scan(batch)
         # insertInto is positional: align to the table's column order.
         cols = self.spark.table(cfg.qualified_table).columns
         obs = Observation()
-        (retained_df.select(*cols)
+        (self.retention_scan(partitions).select(*cols)
          .observe(obs, F.count(F.lit(1)).alias("retained"))
          .write.mode("overwrite")
          .insertInto(cfg.qualified_table))
         observed_retained = int(obs.get["retained"])
-        # plan.counts is always real here: execute() repairs sentinel
-        # counts before batching.
-        before = sum(plan.counts[p][0] for p in batch)
-        per_part = {p: plan.counts[p][1] for p in batch}
+        before = sum(plan.counts[p][0] for p in partitions)
+        per_part = {p: plan.counts[p][1] for p in partitions}
         planned_retained = before - sum(per_part.values())
         if observed_retained != planned_retained:
             log.warning(
-                "batch %s: retained rows at write time (%d) != analyze-time "
-                "plan (%d) — table modified between analyze and rewrite; "
-                "metrics use the observed count", batch, observed_retained,
-                planned_retained)
-            audit("concurrent_modification_detected", batch=batch,
+                "partitions %s: retained rows at write time (%d) != "
+                "analyze-time plan (%d) — table modified between analyze and "
+                "rewrite; metrics use the observed count", partitions,
+                observed_retained, planned_retained)
+            audit("concurrent_modification_detected", partitions=partitions,
                   planned_retained=planned_retained,
                   observed_retained=observed_retained)
-            # Reconcile: retained is the write-time truth (observed in
-            # the write pass itself); deleted falls back to the
-            # analyze-time per-partition match counts — the criteria's
-            # known target set, and the only non-negative estimate
-            # available without a second scan (the retention scan never
-            # reads matching rows, so write-time total is unobservable
-            # for free). Rebuild `before` as their sum so the batch
-            # arithmetic (deleted = before - retained) stays
-            # consistent instead of going negative when a concurrent
-            # writer ADDED rows after analyze. The reference has no
-            # answer here at all — its counts race identically
-            # (DeletionExecutor.java:143-158) with no detection.
+            # Reconcile: retained is the write-time truth; deleted falls
+            # back to the analyze-time match counts, the only non-negative
+            # estimate without a second scan (the retention scan never
+            # reads matching rows). Rebuilding `before` from both keeps
+            # deleted = before - retained from going negative when a
+            # concurrent writer ADDED rows. The reference's counts race
+            # identically with no detection (DeletionExecutor.java:143-158).
             before = observed_retained + sum(per_part.values())
-        self.metrics.record_batch(batch, before, observed_retained, per_part)
+        self.metrics.record_batch(partitions, before, observed_retained,
+                                  per_part)
 
     def drop_partitions(self, partitions: list[str]) -> list[str]:
         """Empty-partition fast path: metadata DROP + external-dir delete.
@@ -353,8 +341,3 @@ class DeletionExecutor:
             return None
         return next((r[1] for r in rows if r[0] == "Location"), None)
 
-
-def _batches(items: list[str], width: int) -> list[list[str]]:
-    """Sequential batches of ``min(width, n)`` (DeletionExecutor.java:235-244)."""
-    width = max(1, width)
-    return [items[i:i + width] for i in range(0, len(items), width)]

@@ -14,9 +14,11 @@ strategy — the design Delta Lake / Iceberg call deletion vectors:
    the key columns. Tombstone sets are tiny relative to the table, so AQE
    plans a broadcast anti join: one pruned scan, zero fact-side shuffle.
 3. ``compact()`` — amortize: physically apply accumulated tombstones with
-   the reference's copy-on-write machinery (backup when enabled, dynamic
-   partition overwrite of affected partitions, metadata-only DROP + HDFS
-   delete for fully-emptied ones via
+   the reference's copy-on-write machinery (backup when enabled, ONE
+   anti-join and ONE dynamic partition overwrite over all affected
+   partitions — no batches of ``partition.parallelism`` as in
+   DeletionExecutor.java:235-244 — and one metadata-only DROP + HDFS
+   delete for the fully-emptied ones via
    :meth:`deletion.DeletionExecutor.drop_partitions`), then clear exactly
    the tombstone files it applied.
 
@@ -176,7 +178,9 @@ class MergeOnReadDeleter:
 
     def compact(self, _files: list[str] | None = None) -> CompactionResult:
         """Apply accumulated tombstones with the copy-on-write machinery,
-        then remove exactly the tombstone files that were applied.
+        then remove exactly the tombstone files that were applied. One
+        pass over all affected partitions: one anti-join, one overwrite
+        job (a single commit), one DROP of the emptied partitions.
 
         ``_files`` injects a store snapshot (testing the concurrent-append
         contract); production callers let compact() take its own.
@@ -203,33 +207,28 @@ class MergeOnReadDeleter:
             self._clear(files)
             return result
 
-        cow = DeletionExecutor(self.spark, cfg)
         if cfg.backup_enabled:
             from .backup import BackupManager
             BackupManager(self.spark, cfg).create_backup(affected)
 
         base = self.spark.table(cfg.qualified_table)
-        width = max(1, cfg.partition_parallelism)
-        for i in range(0, len(affected), width):
-            batch = affected[i:i + width]
-            scoped = base.where(
-                in_list_predicate(cfg.partition_column, batch))
-            # re-project: UsingJoin fronts multi-column keys, and
-            # insertInto below maps columns positionally
-            retained = (scoped.join(keys, on=self.key_columns,
-                                    how="left_anti")
-                        .select(*base.columns))
-            # per-partition retained counts decide rewrite vs drop
-            kept = {r[0] for r in retained
-                    .select(cfg.partition_column).distinct().collect()}
-            emptied = [p for p in batch if p not in kept]
-            if kept:
-                # dynamic-partition overwrite touches only partitions
-                # present in `retained` (format comes from the table)
-                retained.write.mode("overwrite").insertInto(
-                    cfg.qualified_table)
-                result.partitions_rewritten += sorted(kept)
-            result.partitions_dropped += cow.drop_partitions(emptied)
+        # re-project: UsingJoin fronts multi-column keys, and insertInto
+        # below maps columns positionally
+        retained = (base.where(in_list_predicate(cfg.partition_column,
+                                                 affected))
+                    .join(keys, on=self.key_columns, how="left_anti")
+                    .select(*base.columns))
+        # per-partition retained rows decide rewrite vs drop
+        kept = {r[0] for r in retained
+                .select(cfg.partition_column).distinct().collect()}
+        if kept:
+            # one dynamic-partition overwrite; it touches only partitions
+            # present in `retained` (format comes from the table)
+            retained.write.mode("overwrite").insertInto(cfg.qualified_table)
+            result.partitions_rewritten = sorted(kept)
+        result.partitions_dropped = DeletionExecutor(
+            self.spark, cfg).drop_partitions(
+                [p for p in affected if p not in kept])
 
         self._clear(files)
         audit("mor_compact", table=cfg.qualified_table,

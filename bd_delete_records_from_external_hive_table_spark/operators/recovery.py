@@ -71,7 +71,7 @@ class RecoveryManager:
     def _verify(self, ref: BackupRef) -> None:
         self.spark.sql(f"DESCRIBE TABLE {self.config.qualified_table}").collect()
         restored = self.spark.table(self.config.qualified_table).count()
-        expected = self.backups.strategy.backup_count(ref)
+        expected = self.backups.backup_count(ref)
         if restored < expected:
             raise RuntimeError(
                 f"restore verification failed: table has {restored} rows, "

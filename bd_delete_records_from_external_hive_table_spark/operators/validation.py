@@ -131,14 +131,3 @@ class ValidationManager:
         audit("post_validation", table=cfg.qualified_table,
               passed=report.passed, checks=report.checks)
         return report
-
-    def count_matching(self, partitions: list[str] | None = None) -> int:
-        """COUNT(*) of rows the deletion would drop; ``partitions`` prunes
-        the scan — an explicit empty list means an empty scope (count 0),
-        only ``None`` means whole-table."""
-        cfg = self.config
-        df = self.spark.table(cfg.qualified_table)
-        if partitions is not None:
-            df = df.where(in_list_predicate(cfg.partition_column, partitions))
-        return df.where(
-            cfg.criteria.deletion_column(cfg.null_safe_retention)).count()

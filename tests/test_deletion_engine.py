@@ -11,14 +11,22 @@ backup/restore round trip.
 from __future__ import annotations
 
 import itertools
+import json
+import logging
 from datetime import datetime
 
 import pytest
 
 from bd_delete_records_from_external_hive_table_spark.config import DeletionCriteria, EngineConfig
 from bd_delete_records_from_external_hive_table_spark.job import DeletionJob
-from bd_delete_records_from_external_hive_table_spark.operators.backup import BackupManager
-from bd_delete_records_from_external_hive_table_spark.operators.deletion import DeletionExecutor
+from bd_delete_records_from_external_hive_table_spark.operators.backup import (
+    BackupError,
+    BackupManager,
+)
+from bd_delete_records_from_external_hive_table_spark.operators.deletion import (
+    DeletionExecutor,
+    PartitionPlan,
+)
 from bd_delete_records_from_external_hive_table_spark.operators.validation import ValidationManager
 
 _seq = itertools.count()
@@ -395,7 +403,7 @@ def test_backup_restore_round_trip(spark, table):
     cfg = _cfg(table, crit, backup_enabled=True)
     mgr = BackupManager(spark, cfg)
     ref = mgr.create_backup(["20260213"], now=datetime(2026, 2, 13, 12, 0, 0))
-    assert mgr.strategy.backup_count(ref) == 10
+    assert mgr.backup_count(ref) == 10
 
     # delete everything, then restore
     DeletionExecutor(spark, _cfg(table, DeletionCriteria(
@@ -422,7 +430,7 @@ def test_path_backup_round_trip_with_manifest_and_retention(spark, table,
     t_new = datetime(2026, 2, 13, 12, 0, 0)
     ref_old = mgr.create_backup(["20260213"], now=t_old)
     ref = mgr.create_backup(["20260213"], now=t_new)
-    assert mgr.strategy.backup_count(ref) == 10
+    assert mgr.backup_count(ref) == 10
 
     import os
     assert os.path.exists(ref.ref.replace("file:", "") + "/_manifest.txt")
@@ -444,7 +452,7 @@ def test_path_backup_round_trip_with_manifest_and_retention(spark, table,
     removed = mgr.cleanup_old_backups(now=t_new)
     assert len(removed) == 1 and "backup_20260201" in removed[0]
     assert not os.path.exists(old_dir)
-    assert mgr.strategy.backup_count(ref) == 10  # fresh backup intact
+    assert mgr.backup_count(ref) == 10  # fresh backup intact
 
 
 def test_hive_backup_retention_drops_only_old_own_backups(spark):
@@ -525,7 +533,7 @@ def test_latest_backup_path_strategy_picks_newest(spark, table, tmp_path):
     assert found.ref.removeprefix("file:") == newest.ref
     assert found.partitions == ("20260213",)  # parsed from _manifest.txt
     # the discovered ref is restorable as-is
-    assert mgr.strategy.backup_count(found) == 10
+    assert mgr.backup_count(found) == 10
 
 
 def test_latest_backup_none_when_no_backups(spark, table):
@@ -641,3 +649,117 @@ def test_metastore_safe_partition_in_threshold(spark):
     assert spark.conf.get(
         "spark.sql.hive.metastorePartitionPruningFallbackOnException") \
         == "true"
+
+
+def test_dry_run_on_failed_probe_audits_real_affected_partitions(
+        spark, table, caplog):
+    """A dry run over a probe-failed (sentinel) plan measures the real
+    counts and audits the partitions that would actually change."""
+    seed(spark, table)                                   # id 5 matches
+    seed(spark, table, partition="20260214", ids=range(11, 21))
+    job = DeletionJob(spark, _cfg(table, DeletionCriteria(
+        where_clause="id = 5"), dry_run=True))
+    job.handler.analyze = lambda: PartitionPlan(
+        candidates=["20260213", "20260214"],
+        counts={"20260213": (-1, -1), "20260214": (-1, -1)})
+    with caplog.at_level(logging.INFO, logger="bd_engine.audit"):
+        outcome = job.run()
+    assert outcome.success, outcome.error
+    assert (outcome.result.deleted, outcome.result.retained) == (1, 19)
+    [event] = [json.loads(m.split(" ", 1)[1]) for m in caplog.messages
+               if m.startswith("dry_run ")]
+    assert event["affected"] == ["20260213"]
+    assert event["would_delete"] == 1
+
+
+@pytest.mark.parametrize("strategy", ["hive_table", "path"])
+def test_backup_in_the_same_second_never_replaces_the_earlier_one(
+        spark, table, tmp_path, monkeypatch, strategy):
+    """Backup names have one-second resolution. A second backup in the
+    same second must raise before writing anything: the first backup
+    keeps its pre-image, and a job that collides fails with the table
+    unchanged."""
+    from bd_delete_records_from_external_hive_table_spark.operators import backup
+    seed(spark, table)
+    kw = ({"backup_strategy": "path",
+           "backup_location": str(tmp_path / "backups")}
+          if strategy == "path" else {})
+    cfg = _cfg(table, DeletionCriteria(where_clause="id = 5"),
+               backup_enabled=True, **kw)
+    mgr = BackupManager(spark, cfg)
+    t = datetime(2026, 2, 13, 12, 0, 0)
+    first = mgr.create_backup(["20260213"], now=t)
+    seed(spark, table, ids=[11])
+    with pytest.raises(BackupError):
+        mgr.create_backup(["20260213"], now=t)
+    assert mgr.backup_count(first) == 10
+
+    class _SameSecond(datetime):
+        @classmethod
+        def now(cls, tz=None):
+            return t
+
+    monkeypatch.setattr(backup, "datetime", _SameSecond)
+    outcome = DeletionJob(spark, cfg).run()
+    assert not outcome.success and outcome.backup is None
+    assert "backup not created" in outcome.error
+    assert remaining_ids(spark, table) == list(range(1, 12))
+    assert mgr.backup_count(first) == 10
+
+
+def _seed_days(spark, table: str, days, status=None) -> None:
+    """Ten rows in each partition ``202601dd``: ids dd*10+1 .. dd*10+10,
+    every id with i % 3 == 2 INACTIVE unless ``status`` is given."""
+    rows = [(i, f"User{i}", status or ("INACTIVE" if i % 3 == 2 else "ACTIVE"),
+             datetime(2026, 1, d, 9), f"202601{d:02d}")
+            for d in days for i in range(d * 10 + 1, d * 10 + 11)]
+    spark.createDataFrame(
+        rows, "id BIGINT, name STRING, status STRING, "
+              "row_create_ts TIMESTAMP, partition_id STRING",
+    ).write.insertInto(f"{DB}.{table}")
+
+
+def test_one_rewrite_pass_covers_more_partitions_than_a_batch(spark, table):
+    """Twelve partially matching partitions (more than the reference's
+    default batch of ten) are rewritten by one overwrite job."""
+    days = range(1, 13)
+    _seed_days(spark, table, days)
+    outcome = DeletionJob(spark, _cfg(table, DeletionCriteria(
+        where_clause="status = 'INACTIVE'"))).run()
+    assert outcome.success, outcome.error
+    parts = [f"202601{d:02d}" for d in days]
+    assert outcome.metrics.batches_processed == 1
+    assert outcome.result.partitions_rewritten == parts
+    assert outcome.metrics.per_partition_deleted == {
+        f"202601{d:02d}": sum(1 for i in range(d * 10 + 1, d * 10 + 11)
+                              if i % 3 == 2) for d in days}
+    assert remaining_ids(spark, table) == [
+        i for d in days for i in range(d * 10 + 1, d * 10 + 11) if i % 3 != 2]
+
+
+def test_failure_inside_the_rewrite_restores_the_exact_pre_image(
+        spark, table):
+    """A task failure inside the single rewrite job, after an emptied
+    partition was already dropped, is recovered from the backup: the
+    table ends exactly as it was before the job."""
+    from pyspark.sql import functions as F
+    _seed_days(spark, table, range(1, 13))
+    _seed_days(spark, table, [13], status="GONE")       # dropped, not rewritten
+
+    def rows():
+        return sorted(tuple(r) for r in spark.table(f"{DB}.{table}").collect())
+
+    before = rows()
+    job = DeletionJob(spark, _cfg(table, DeletionCriteria(
+        where_clause="status IN ('INACTIVE', 'GONE')"), backup_enabled=True))
+    scan = job.executor.retention_scan
+    job.executor.retention_scan = lambda parts: scan(parts).withColumn(
+        "name", F.when(F.col("partition_id") == "20260107",
+                       F.raise_error(F.lit("injected rewrite failure")))
+        .otherwise(F.col("name")))
+    job.recovery._sleep = lambda s: None
+    outcome = job.run()
+    assert not outcome.success
+    assert "injected rewrite failure" in outcome.error
+    assert outcome.recovered
+    assert rows() == before

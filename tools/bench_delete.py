@@ -352,7 +352,6 @@ class _FlakyBackups:
     def __init__(self, inner, fail_times: int = 1):
         self._inner = inner
         self._fails = fail_times
-        self.strategy = inner.strategy
 
     def restore(self, ref):
         if self._fails > 0:
@@ -475,10 +474,10 @@ def many_partition_probe(spark) -> dict:
     analyze_s = round(time.time() - t0, 3)
     jobs = sc.statusTracker().getJobIdsForGroup("analyze-many")
     sc.setJobGroup("", "")
-    # ...and the full multi-batch delete over the same table: ~122
-    # affected partitions / partition_parallelism=10 ⇒ ~13 rewrite
-    # batches — the C2/C3 batching path the 30-partition scenarios
-    # (≤7 affected, single batch) never exercise.
+    # ...and the full delete over the same table: ~122 affected
+    # partitions rewritten in ONE dynamic-overwrite pass (the reference
+    # batches them, DeletionExecutor.java:235-244) — a partition count the
+    # 30-partition scenarios (≤7 affected) never exercise.
     t0 = time.time()
     outcome = DeletionJob(spark, cfg).run()
     delete_s = round(time.time() - t0, 3)
@@ -495,6 +494,7 @@ def many_partition_probe(spark) -> dict:
         "delete_wall_s": delete_s,
         "deleted": r.deleted,
         "partitions_rewritten": len(r.partitions_rewritten),
+        # rewrite jobs: 1 whenever any partition is partially rewritten
         "rewrite_batches": m.batches_processed,
         "validation_passed": m.validation_passed,
     }

@@ -107,8 +107,12 @@ def _run_at(sf_dir: str, names: list[str],
                 plan_txt = df._sc._jvm.PythonSQLUtils.explainString(
                     df._jdf.queryExecution(), "simple")
                 out[name]["single_sort"] = "Coalesce 1" in plan_txt
-            except Exception:
-                pass
+            except Exception as exc:
+                # None, not absent: a broken probe must not read as a
+                # clean bounded-sort pass
+                out[name]["single_sort"] = None
+                print(f"warning: single_sort probe failed for {name}: "
+                      f"{exc}", file=sys.stderr)
             if save is not None:
                 save(out)
     finally:
@@ -312,6 +316,10 @@ def main(top_n: int = 20, only: str | None = None,
                       "bounded_sort_violations":
                           [n for n, s in scaling.items()
                            if s.get("bounded_sort_violation")],
+                      # the plan probe failed: the guard could not look
+                      "bounded_sort_unchecked":
+                          [n for n in scaling
+                           if r01[n].get("single_sort", False) is None],
                       "ratios": {n: s["warm_ratio"]
                                  for n, s in scaling.items()}}))
 
