@@ -70,8 +70,8 @@ def build_parser() -> argparse.ArgumentParser:
                         "rows) cost); mor-compact = physically apply "
                         "accumulated tombstones and clear the store; "
                         "restore = manual restore of the most recent "
-                        "backup (dynamic-partition overwrite + metadata "
-                        "repair)")
+                        "backup (dynamic-partition overwrite + table "
+                        "refresh)")
     p.add_argument("--dv-path",
                    help="Tombstone store path (required for mor strategies)")
     p.add_argument("--key-columns",

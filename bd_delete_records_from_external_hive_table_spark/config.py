@@ -132,7 +132,6 @@ class EngineConfig:
 
     # validation (C7)
     validation_enabled: bool = True
-    validation_sample_size: int = 10_000
     validation_tolerance_pct: float = 0.0
 
     # recovery (C8)
@@ -169,10 +168,10 @@ class EngineConfig:
 # -- properties-file loading (JobConfig.java:274-306) ------------------------
 
 #: properties key → (EngineConfig field, parser). Mirrors
-#: src/main/resources/application.properties:13-32, except
-#: ``partition.parallelism`` and ``batch.size``: the engine rewrites in one
-#: pass and the reference never reads ``batch.size``, so both are ignored
-#: like any other unknown key.
+#: src/main/resources/application.properties:13-32, except three keys
+#: ignored like any unknown one: ``partition.parallelism`` (one-pass
+#: rewrite), ``batch.size`` (never read by the reference) and
+#: ``validation.sample.size`` (post-validation counts every match).
 _PROPERTY_KEYS = {
     "backup.strategy": ("backup_strategy",
                         lambda v: "path" if v == "hdfs" else v),
@@ -180,7 +179,6 @@ _PROPERTY_KEYS = {
     "backup.retention.days": ("backup_retention_days", int),
     "validation.enabled": ("validation_enabled",
                            lambda v: v.lower() == "true"),
-    "validation.sample.size": ("validation_sample_size", int),
     "validation.tolerance.percent": ("validation_tolerance_pct", float),
     "recovery.auto.enabled": ("auto_recovery", lambda v: v.lower() == "true"),
     "recovery.max.retries": ("max_retries", int),

@@ -385,9 +385,13 @@ def connected_components(pairs: DataFrame, src: str = "a", dst: str = "b",
     convergence job — the driver pass is strictly cheaper there) and
     the distributed rounds above it. Equality of the two regimes is
     test-asserted.
+
+    An edge with a NULL endpoint joins nothing and is dropped before the
+    regime split, so a node seen only on such edges is absent from the
+    output under either regime.
     """
     e = pairs.select(F.col(src).cast("long").alias("u"),
-                     F.col(dst).cast("long").alias("v"))
+                     F.col(dst).cast("long").alias("v")).dropna()
     # lazy checkpoint: the sizing count below materializes edges once;
     # whichever regime runs next reads the materialized blocks
     edges = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v"))) \

@@ -305,7 +305,9 @@ class DeletionExecutor:
         PARTITION (a), PARTITION (b), ...`` removes them all, then each
         directory is deleted. Hive drops the specs one by one either way,
         so the single statement is no less atomic than the loop; a failure
-        raises before any directory is touched."""
+        raises before any directory is touched. A directory that survives
+        its delete raises too (the reference only logs): after the DROP,
+        so the job's recovery restores the backup."""
         if not partitions:
             return []
         cfg = self.config
@@ -316,12 +318,11 @@ class DeletionExecutor:
             + ", ".join(f"PARTITION ({spec})" for spec in specs))
         fs = HadoopFS(self.spark)
         for pid, location in zip(partitions, locations):
-            if location:
-                try:
-                    fs.delete(location, recursive=True)
-                except Exception as exc:
-                    log.warning("could not delete partition dir %s: %s",
-                                location, exc)
+            if (location and not fs.delete(location, recursive=True)
+                    and fs.exists(location)):
+                raise RuntimeError(
+                    f"partition {pid}: directory {location} survived its "
+                    f"delete")
             audit("partition_dropped", table=cfg.qualified_table,
                   partition=pid, location=location)
         return list(partitions)

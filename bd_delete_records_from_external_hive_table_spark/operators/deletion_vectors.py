@@ -52,7 +52,7 @@ import uuid
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import EngineConfig
@@ -218,14 +218,13 @@ class MergeOnReadDeleter:
                                                  affected))
                     .join(keys, on=self.key_columns, how="left_anti")
                     .select(*base.columns))
-        # per-partition retained rows decide rewrite vs drop
-        kept = {r[0] for r in retained
-                .select(cfg.partition_column).distinct().collect()}
-        if kept:
-            # one dynamic-partition overwrite; it touches only partitions
-            # present in `retained` (format comes from the table)
-            retained.write.mode("overwrite").insertInto(cfg.qualified_table)
-            result.partitions_rewritten = sorted(kept)
+        # one dynamic-partition overwrite; it touches only partitions
+        # present in `retained`, which it observes: the rest are emptied
+        obs = Observation()
+        (retained.observe(obs, F.collect_set(cfg.partition_column)
+                          .alias("kept"))
+         .write.mode("overwrite").insertInto(cfg.qualified_table))
+        result.partitions_rewritten = kept = sorted(obs.get["kept"])
         result.partitions_dropped = DeletionExecutor(
             self.spark, cfg).drop_partitions(
                 [p for p in affected if p not in kept])

@@ -1,12 +1,16 @@
 """Failure recovery: restore-from-backup with exponential backoff.
 
 Re-expression of ``/root/reference/.../recovery/RecoveryManager.java``:
-when a deletion workflow fails and auto-recovery is enabled, retry the
-backup restore up to ``max_retries`` times with ``2^attempt`` seconds of
-backoff (RecoveryManager.java:49-77), verify via DESCRIBE, and repair
-metastore metadata (REFRESH + MSCK REPAIR, RecoveryManager.java:113-131).
-When recovery is impossible, emit the manual-recovery SQL runbook
-(RecoveryManager.java:136-153).
+retry the backup restore up to ``max_retries`` times with ``2^attempt``
+seconds of backoff (RecoveryManager.java:49-77), or emit the
+manual-recovery SQL runbook (RecoveryManager.java:136-153).
+
+Deviations, so a recovered table is exactly the backup's pre-image: no
+``MSCK REPAIR TABLE`` (RecoveryManager.java:113-131), which re-registers
+any partition directory left on disk and so brings deleted rows back —
+the restore's dynamic-partition overwrite registers what it writes; and
+each backup partition's (row count, row fingerprint) must equal the
+backup's, where a whole-table count accepted a missed partition.
 """
 
 from __future__ import annotations
@@ -14,10 +18,13 @@ from __future__ import annotations
 import logging
 import time
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..config import EngineConfig
 from ..metrics import audit
+from ..partitions import in_list_predicate
 from .backup import BackupManager, BackupRef
 
 __all__ = ["RecoveryManager"]
@@ -59,36 +66,48 @@ class RecoveryManager:
         return False
 
     def repair_metadata(self) -> None:
-        """REFRESH + MSCK REPAIR after a failed write
-        (RecoveryManager.java:113-131)."""
-        t = self.config.qualified_table
-        self.spark.sql(f"REFRESH TABLE {t}")
-        try:
-            self.spark.sql(f"MSCK REPAIR TABLE {t}")
-        except Exception as exc:
-            log.warning("MSCK REPAIR failed (non-fatal): %s", exc)
+        """Drop Spark's cached file listing of the table after a write."""
+        self.spark.sql(f"REFRESH TABLE {self.config.qualified_table}")
 
     def _verify(self, ref: BackupRef) -> None:
-        self.spark.sql(f"DESCRIBE TABLE {self.config.qualified_table}").collect()
-        restored = self.spark.table(self.config.qualified_table).count()
-        expected = self.backups.backup_count(ref)
-        if restored < expected:
+        """Raise unless each backup partition holds the backup's rows."""
+        pcol = self.config.partition_column
+        source = self.spark.table(ref.source_table)
+        restored = _fingerprints(source.where(in_list_predicate(
+            pcol, list(ref.partitions))), source.schema, pcol)
+        backup = _fingerprints(
+            self.backups.strategy.read(ref), source.schema, pcol)
+        bad = [p for p in ref.partitions if restored.get(p) != backup.get(p)]
+        if bad:
             raise RuntimeError(
-                f"restore verification failed: table has {restored} rows, "
-                f"backup has {expected}")
+                f"restore verification failed: partitions {bad} differ "
+                f"from the backup")
 
     def manual_runbook(self, ref: BackupRef | None) -> str:
         """The manual-recovery SQL the reference prints
-        (RecoveryManager.java:136-153)."""
+        (RecoveryManager.java:136-153), without its MSCK line."""
         t = self.config.qualified_table
         if ref is None:
             return (f"-- No backup available for {t}.\n"
                     f"-- Restore from your own snapshot, then:\n"
-                    f"REFRESH TABLE {t};\nMSCK REPAIR TABLE {t};")
+                    f"REFRESH TABLE {t};")
         if ref.strategy == "hive_table":
             src = f"SELECT * FROM {ref.ref}"
         else:
             src = f"SELECT * FROM orc.`{ref.ref}`"
         return ("-- Manual recovery runbook\n"
                 f"INSERT OVERWRITE TABLE {t} {src};\n"
-                f"REFRESH TABLE {t};\nMSCK REPAIR TABLE {t};")
+                f"REFRESH TABLE {t};")
+
+
+def _fingerprints(rows: DataFrame, schema: StructType,
+                  pcol: str) -> dict[str, tuple[int, int]]:
+    """``{partition: (rows, sum of row hashes)}`` in one aggregation, cast
+    to the table's schema (a path backup infers numeric partition values).
+    32-bit hashes summed as bigint cannot overflow under ANSI mode."""
+    cols = [F.col(f.name).cast(f.dataType).alias(f.name) for f in schema]
+    out = (rows.select(*cols).groupBy(pcol)
+           .agg(F.count(F.lit(1)).alias("n"),
+                F.sum(F.hash(*schema.names).cast("long")).alias("h"))
+           .collect())
+    return {r[pcol]: (r["n"], r["h"]) for r in out}

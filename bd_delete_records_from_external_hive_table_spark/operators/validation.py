@@ -1,21 +1,19 @@
 """Pre/post-deletion validation.
 
 Re-expression of ``/root/reference/.../validation/ValidationManager.java``
-and ``DataIntegrityValidator.java``. Four post-deletion checks (C7):
+and ``DataIntegrityValidator.java``. Post-deletion validation is one
+conditional-aggregate scan for (a)+(d) and one listing for (c) (C7):
 
 (a) retained count within ``expected ± tolerance%`` (ValidationManager.java:142-163)
-(b) sampled integrity: no sampled surviving row matches the criteria
-    (DataIntegrityValidator.java:33-118 — Bernoulli sample, fraction =
-    sample_size / total, short-circuit when total <= sample_size)
 (c) partition structure intact for partitions expected to survive —
     one ``SHOW PARTITIONS`` listing and a set-membership test, where the
     reference probes ``SHOW PARTITIONS ... PARTITION(spec)`` once per
     partition (DataIntegrityValidator.java:123-145)
 (d) zero rows still match the criteria (ValidationManager.java:181-194)
 
-Engine upgrades: the sample takes a fixed seed for deterministic tests
-(the reference is seedless), and check (d) uses the same single-scan count
-as the probe rather than a fresh SQL string.
+The reference's sampled check (b), no sampled row still matches
+(DataIntegrityValidator.java:33-118), is not run: (d) counts every match
+over the same rows, so (b) could never fail where (d) passed.
 """
 
 from __future__ import annotations
@@ -70,7 +68,6 @@ class ValidationManager:
 
     def validate_post_deletion(self, expected_retained: int | None,
                                surviving_partitions: list[str] | None = None,
-                               seed: int = 42,
                                scope_partitions: list[str] | None = None) -> ValidationReport:
         """``scope_partitions`` restricts every check to the partitions the
         deletion actually covered (the candidate set after partition-window
@@ -90,10 +87,7 @@ class ValidationManager:
         # under null-safe retention, surviving NULL-of-P rows are intended
         pred = cfg.criteria.deletion_column(cfg.null_safe_retention)
 
-        # (a) count reconciliation + (d) zero remaining matches — ONE
-        # conditional-aggregate scan for both (the reference runs two
-        # jobs, ValidationManager.java:142-163 + 181-194; at 100 TB the
-        # second full pass is pure waste)
+        # (a) + (d): ONE conditional-aggregate scan; the reference runs two
         from pyspark.sql import functions as F
         row = table.agg(
             F.count(F.lit(1)).alias("total"),
@@ -107,19 +101,6 @@ class ValidationManager:
                           f"tol={tol}")
         report.record("zero_matching_remain", remaining == 0,
                       f"remaining_matches={remaining}")
-
-        # (b) sampled integrity check — when everything fits in the
-        # sample, check (d) already counted the identical full scan
-        if cfg.validation_sample_size > 0 and actual > 0:
-            if actual <= cfg.validation_sample_size:
-                bad = remaining
-            else:
-                fraction = min(1.0, cfg.validation_sample_size / actual)
-                sample = table.sample(withReplacement=False,
-                                      fraction=fraction, seed=seed)
-                bad = sample.where(pred).count()
-            report.record("sample_integrity", bad == 0,
-                          f"sampled_matches={bad}")
 
         # (c) partition structure intact: one listing for all partitions
         if surviving_partitions:

@@ -18,7 +18,7 @@ instead of left to callers:
 - **Partitioned writes** go through the same ``partitionBy`` +
   per-partition directory layout the deletion engine manages, so any
   dataset written here is immediately partition-prunable (and Hive-
-  attachable via ``MSCK REPAIR``).
+  attachable with ``ALTER TABLE ... ADD PARTITION``).
 - Columnar formats get codec defaults (snappy) matching the session conf
   (`SparkSessionManager.java:39`); text formats compress with gzip only
   behind an explicit flag, since gzip files are unsplittable — one 50 GB

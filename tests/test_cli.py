@@ -49,14 +49,15 @@ def test_properties_map_to_config_kwargs(props_file):
     assert kw["backup_strategy"] == "path"  # hdfs aliases to path
     assert kw["backup_location"] == "/tmp/backups"
     assert kw["backup_retention_days"] == 14
-    assert kw["validation_sample_size"] == 5000
     assert kw["validation_tolerance_pct"] == 0.5
     assert kw["auto_recovery"] is False
     assert kw["max_retries"] == 5
     assert kw["dry_run"] is True
     # reference properties files still load: the engine rewrites in one
-    # pass, so the batch-width keys are ignored like any unknown key
+    # pass, so the batch-width keys are ignored like any unknown key, and
+    # post-validation counts every match, so the sample size is too
     assert "partition_parallelism" not in kw and "batch_size" not in kw
+    assert "validation_sample_size" not in kw
     assert kw["extra"]["spark.app.name"] == "HiveTableDeletionJob"
 
 
@@ -81,7 +82,6 @@ def test_defaults_match_reference():
     assert cfg.criteria.time_column == "row_create_ts"
     assert cfg.backup_strategy == "hive_table"
     assert cfg.backup_retention_days == 7
-    assert cfg.validation_sample_size == 10_000
     assert cfg.max_retries == 3
     assert cfg.dry_run is False
 

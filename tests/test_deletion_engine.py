@@ -763,3 +763,80 @@ def test_failure_inside_the_rewrite_restores_the_exact_pre_image(
     assert "injected rewrite failure" in outcome.error
     assert outcome.recovered
     assert rows() == before
+
+
+@pytest.fixture
+def external_table(spark, tmp_path):
+    """An EXTERNAL table: DROP PARTITION keeps its files on disk."""
+    name = f"test_ext_{next(_seq)}"
+    loc = str(tmp_path / name)
+    spark.sql(f"""
+        CREATE EXTERNAL TABLE {DB}.{name} (
+          id BIGINT, name STRING, status STRING, row_create_ts TIMESTAMP
+        ) PARTITIONED BY (partition_id STRING) STORED AS ORC
+        LOCATION '{loc}'
+    """)
+    yield name
+    spark.sql(f"DROP TABLE IF EXISTS {DB}.{name}")
+    for t in spark.catalog.listTables(DB):
+        if t.name.startswith(f"{name}_backup_"):
+            spark.sql(f"DROP TABLE IF EXISTS {DB}.{t.name}")
+
+
+def _rows(spark, table: str) -> list[tuple]:
+    return sorted(tuple(r) for r in spark.table(f"{DB}.{table}").collect())
+
+
+@pytest.mark.parametrize("strategy", ["hive_table", "path"])
+def test_failed_partition_dir_delete_fails_the_job_and_recovers(
+        spark, external_table, tmp_path, monkeypatch, strategy):
+    """An emptied partition's directory that survives its delete must not
+    be reported as dropped: the job fails after the DROP and recovery
+    restores the exact pre-image. The path backup reads its partition
+    column back as a number; the restore check still matches it."""
+    from bd_delete_records_from_external_hive_table_spark.sources.fs import HadoopFS
+    name = external_table
+    kw = ({"backup_strategy": "path",
+           "backup_location": str(tmp_path / "backups")}
+          if strategy == "path" else {})
+    seed(spark, name, partition="20260213")
+    seed(spark, name, partition="20260214", ids=range(11, 21))
+    before = _rows(spark, name)
+    monkeypatch.setattr(HadoopFS, "delete",
+                        lambda self, path, recursive=True: False)
+    job = DeletionJob(spark, _cfg(name, DeletionCriteria(
+        start_time=datetime(2026, 2, 13), end_time=datetime(2026, 2, 14)),
+        backup_enabled=True, **kw))
+    job.recovery._sleep = lambda s: None
+    outcome = job.run()
+    assert not outcome.success
+    assert "survived its delete" in outcome.error
+    assert outcome.recovered
+    assert _rows(spark, name) == before
+
+
+def test_recovery_never_resurrects_a_hand_dropped_partition(
+        spark, external_table):
+    """A partition dropped by hand from an EXTERNAL table keeps its files.
+    A later job that fails mid-rewrite is recovered from its backup, and
+    the hand-dropped partition stays unlisted with its rows absent."""
+    from pyspark.sql import functions as F
+    name = external_table
+    seed(spark, name, partition="20260212", ids=range(21, 31))
+    seed(spark, name, partition="20260213")
+    spark.sql(f"ALTER TABLE {DB}.{name} "
+              f"DROP PARTITION (partition_id='20260212')")
+    before = _rows(spark, name)
+    job = DeletionJob(spark, _cfg(name, DeletionCriteria(
+        where_clause="id = 5"), backup_enabled=True))
+    scan = job.executor.retention_scan
+    job.executor.retention_scan = lambda parts: scan(parts).withColumn(
+        "name", F.raise_error(F.lit("injected rewrite failure")))
+    job.recovery._sleep = lambda s: None
+    outcome = job.run()
+    assert not outcome.success
+    assert "injected rewrite failure" in outcome.error
+    assert outcome.recovered
+    assert [r[0] for r in spark.sql(
+        f"SHOW PARTITIONS {DB}.{name}").collect()] == ["partition_id=20260213"]
+    assert _rows(spark, name) == before

@@ -322,20 +322,27 @@ def test_connected_components_regimes_agree(spark, monkeypatch):
     """Round 12: the driver union-find regime and the distributed
     pointer-doubling rounds must return the IDENTICAL (node, component)
     fixpoint — same rows, same schema — on chains, merges, cliques and
-    singleton pairs. The cap is forced to 0 to pin the distributed
-    path (the same edge set stays under the default cap)."""
-    edges = [(1, 2), (2, 3), (3, 4), (10, 11),
-             (20, 21), (22, 23), (21, 22),
-             (30, 31), (31, 32), (30, 32),       # clique
-             (50, 40)]                            # reversed-order pair
-    pairs = spark.createDataFrame(edges, "a long, b long")
-    driver = dedup.connected_components(pairs)
-    assert driver.schema.simpleString() == \
+    singleton pairs, and on edges with a NULL endpoint. The cap is
+    forced to 0 to pin the distributed path (the same edge sets stay
+    under the default cap)."""
+    graphs = [
+        [(1, 2), (2, 3), (3, 4), (10, 11),
+         (20, 21), (22, 23), (21, 22),
+         (30, 31), (31, 32), (30, 32),            # clique
+         (50, 40)],                                # reversed-order pair
+        [(1, 2), (2, None), (None, 5), (7, 8)],   # NULL endpoints
+    ]
+    frames = [spark.createDataFrame(edges, "a long, b long")
+              for edges in graphs]
+    driver = [dedup.connected_components(p) for p in frames]
+    assert driver[0].schema.simpleString() == \
         "struct<node:bigint,component:bigint>"
+    wants = [sorted(map(tuple, d.collect())) for d in driver]
+    assert wants[1] == [(1, 1), (2, 1), (7, 7), (8, 7)]
     monkeypatch.setattr(dedup, "_CC_DRIVER_EDGE_CAP", 0)
-    dist = dedup.connected_components(pairs)
-    assert sorted(map(tuple, driver.collect())) == \
-        sorted(map(tuple, dist.collect()))
+    for pairs, want in zip(frames, wants):
+        assert sorted(map(tuple, dedup.connected_components(pairs)
+                          .collect())) == want
 
 
 def test_exact_dedup_idempotent(spark, sf_dir):

@@ -93,3 +93,32 @@ def test_recovery_disabled_returns_false_without_touching_table(spark, table):
     rec = RecoveryManager(spark, cfg, mgr, sleep=lambda s: None)
     assert rec.recover(ref) is False
     assert spark.table(f"{DB}.{table}").count() == 10  # untouched
+
+
+def test_recovery_rejects_a_restore_missing_a_backup_partition(spark, table):
+    """The restore check is exact per backup partition: a restore that
+    writes only one of the two backed-up partitions fails recovery even
+    though a larger partition outside the backup keeps the whole table
+    above the backup's row count."""
+    seed(spark, table, partition="20260213")
+    seed(spark, table, partition="20260214", ids=range(11, 21))
+    seed(spark, table, partition="20260215", ids=range(100, 130))
+    cfg = _cfg(table, DeletionCriteria(where_clause="id < 100"),
+               backup_enabled=True, max_retries=1)
+    mgr = BackupManager(spark, cfg)
+    ref = mgr.create_backup(["20260213", "20260214"],
+                            now=datetime(2026, 2, 13, 12, 0))
+    DeletionExecutor(spark, cfg).execute()
+    assert spark.table(f"{DB}.{table}").count() == 30
+
+    def restore_one_partition(ref):
+        cols = spark.table(f"{DB}.{table}").columns
+        rows = (mgr.strategy.read(ref)
+                .where("partition_id = '20260213'").select(*cols))
+        rows.write.mode("overwrite").insertInto(f"{DB}.{table}")
+        return 10
+
+    mgr.restore = restore_one_partition
+    rec = RecoveryManager(spark, cfg, mgr, sleep=lambda s: None)
+    assert rec.recover(ref) is False
+    assert spark.table(f"{DB}.{table}").count() == 40
