@@ -16,15 +16,16 @@ HDFSBackupStrategy.java:83). A strategy keeps only what differs: where
 - **HiveTableBackupStrategy** — ``saveAsTable`` a partitioned ORC clone named
   ``<table>_backup_<yyyyMMdd_HHmmss>`` tagged with TBLPROPERTIES
   (HiveTableBackupStrategy.java:25-57); retention drops backup tables
-  older than N days (98-138). Candidates come from one ``SHOW TABLES ...
-  LIKE '<table>_backup_*'`` and one raw ``SHOW TBLPROPERTIES`` collect
-  each, so neither retention nor ``latest`` runs a Spark job.
+  older than N days (98-138). The tagging, the candidate listing with its
+  properties and the DROP are ``catalog.py``'s; none runs a Spark job.
 - **PathBackupStrategy** — partitioned ORC written to a filesystem path plus
   a ``_manifest.txt`` manifest (HDFSBackupStrategy.java:28-53,151-175 —
   the reference names it ``_metadata.txt``, but Spark's file index treats
   names starting with ``_metadata`` as parquet summary files and would
   feed it to the ORC reader; ``_manifest`` stays properly hidden);
-  retention deletes old dirs by modification time (100-129).
+  retention deletes old dirs by modification time (100-129). The copy is
+  read back with the source table's schema: inference would read a
+  partition ``0213`` as the number 213 and restore it into partition 213.
 
 Backup names have one-second resolution, so both strategies write with
 ``mode("errorifexists")``: a second backup in the same second raises
@@ -36,7 +37,6 @@ global clock so tests are deterministic.
 
 from __future__ import annotations
 
-import logging
 from dataclasses import dataclass
 from datetime import datetime, timedelta
 
@@ -44,6 +44,7 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from .. import catalog
 from ..config import EngineConfig
 from ..metrics import audit
 from ..partitions import in_list_predicate
@@ -51,8 +52,6 @@ from ..sources.fs import HadoopFS
 
 __all__ = ["BackupManager", "BackupRef", "HiveTableBackupStrategy",
            "PathBackupStrategy", "BackupError"]
-
-log = logging.getLogger(__name__)
 
 _TS_FMT = "%Y%m%d_%H%M%S"
 
@@ -81,22 +80,16 @@ class HiveTableBackupStrategy:
         self.spark = spark
         self.config = config
 
-    def _backup_table(self, now: datetime) -> str:
-        return (f"{self.config.database}."
-                f"{self.config.table}_backup_{now.strftime(_TS_FMT)}")
-
     def create(self, source: DataFrame, partitions: list[str],
                now: datetime) -> BackupRef:
         cfg = self.config
-        name = self._backup_table(now)
+        name = f"{cfg.qualified_table}_backup_{now.strftime(_TS_FMT)}"
         (source.write.mode("errorifexists").format("orc")
            .partitionBy(cfg.partition_column).saveAsTable(name))
-        parts_csv = ",".join(partitions).replace("'", "")
-        self.spark.sql(
-            f"ALTER TABLE {name} SET TBLPROPERTIES ("
-            f"'backup_source'='{cfg.qualified_table}',"
-            f"'backup_timestamp'='{now.strftime(_TS_FMT)}',"
-            f"'backup_partitions'='{parts_csv}')")
+        catalog.set_properties(self.spark, name, {
+            "backup_source": cfg.qualified_table,
+            "backup_timestamp": now.strftime(_TS_FMT),
+            "backup_partitions": ",".join(partitions)})
         return BackupRef(self.name, name, cfg.qualified_table,
                          tuple(partitions), now)
 
@@ -106,13 +99,14 @@ class HiveTableBackupStrategy:
     def cleanup_old(self, retention_days: int, now: datetime) -> list[str]:
         """Drop backup tables older than the retention window
         (HiveTableBackupStrategy.java:98-138)."""
+        cfg = self.config
         cutoff = now - timedelta(days=retention_days)
         dropped = []
-        for name, props in self._backups():
-            ts = _backup_ts(props, name, self.config.table)
+        for name, props in catalog.tables_with_properties(
+                self.spark, cfg.database, f"{cfg.table}_backup_*"):
+            ts = _backup_ts(props, name, cfg.table)
             if ts is not None and ts < cutoff:
-                self.spark.sql(
-                    f"DROP TABLE IF EXISTS {self.config.database}.{name}")
+                catalog.drop_table(self.spark, f"{cfg.database}.{name}")
                 dropped.append(name)
         return dropped
 
@@ -123,44 +117,22 @@ class HiveTableBackupStrategy:
         different table is never eligible (restoring it would overwrite
         this table with another table's rows)."""
         cfg = self.config
-        best: tuple[datetime, str, tuple[str, ...]] | None = None
-        for name, props in self._backups():
-            source = props.get("backup_source")
-            if source is not None and source != cfg.qualified_table:
-                continue
+        found = []
+        for name, props in catalog.tables_with_properties(
+                self.spark, cfg.database, f"{cfg.table}_backup_*"):
             ts = _backup_ts(props, name, cfg.table)
-            if ts is not None and (best is None or ts > best[0]):
-                parts = tuple(p for p in
-                              props.get("backup_partitions", "").split(",")
-                              if p)
-                best = (ts, f"{cfg.database}.{name}", parts)
-        if best is None:
+            if ts is not None and props.get("backup_source") in (
+                    None, cfg.qualified_table):
+                found.append((ts, name, props.get("backup_partitions", "")))
+        if not found:
             return None
-        return BackupRef(self.name, best[1], cfg.qualified_table,
-                         best[2], best[0])
+        ts, name, parts = max(found, key=lambda f: f[0])
+        return BackupRef(self.name, f"{cfg.database}.{name}",
+                         cfg.qualified_table, _split(parts), ts)
 
-    def _backups(self) -> list[tuple[str, dict[str, str]]]:
-        """(name, TBLPROPERTIES) of every table named like a backup of this
-        source. One ``SHOW TABLES ... LIKE`` lists them instead of fetching
-        every table's metadata; its match is case-insensitive, as it must
-        be: Hive lowercases table names, and mixed-case configs must still
-        find their own backups. Command rows are collected raw: a DataFrame
-        filter on them would launch a Spark job per backup."""
-        cfg = self.config
-        out = []
-        for row in self.spark.sql(f"SHOW TABLES IN {cfg.database} "
-                                  f"LIKE '{cfg.table}_backup_*'").collect():
-            if row.isTemporary:
-                continue
-            props: dict[str, str] = {}
-            try:
-                props = dict(self.spark.sql(
-                    f"SHOW TBLPROPERTIES {cfg.database}.{row.tableName}"
-                ).collect())
-            except Exception:  # pragma: no cover - probe best-effort
-                pass
-            out.append((row.tableName, props))
-        return out
+
+def _split(csv: str) -> tuple[str, ...]:
+    return tuple(p for p in csv.split(",") if p)
 
 
 def _backup_ts(props: dict[str, str], name: str,
@@ -187,27 +159,23 @@ class PathBackupStrategy:
         self.config = config
         self.fs = HadoopFS(spark)
 
-    def _backup_path(self, now: datetime) -> str:
-        return (f"{self.config.backup_location.rstrip('/')}/"
-                f"{self.config.table}_backup_{now.strftime(_TS_FMT)}")
-
     def create(self, source: DataFrame, partitions: list[str],
                now: datetime) -> BackupRef:
         cfg = self.config
-        path = self._backup_path(now)
+        path = (f"{cfg.backup_location.rstrip('/')}/"
+                f"{cfg.table}_backup_{now.strftime(_TS_FMT)}")
         (source.write.mode("errorifexists").format("orc")
            .partitionBy(cfg.partition_column).save(path))
-        manifest = "\n".join([
-            f"source_table={cfg.qualified_table}",
-            f"backup_timestamp={now.strftime(_TS_FMT)}",
-            f"partitions={','.join(partitions)}",
-        ])
-        self.fs.write_text(f"{path}/_manifest.txt", manifest)
+        self.fs.write_text(f"{path}/_manifest.txt",
+                           f"source_table={cfg.qualified_table}\n"
+                           f"backup_timestamp={now.strftime(_TS_FMT)}\n"
+                           f"partitions={','.join(partitions)}")
         return BackupRef(self.name, path, cfg.qualified_table,
                          tuple(partitions), now)
 
     def read(self, ref: BackupRef) -> DataFrame:
-        return self.spark.read.format("orc").load(ref.ref)
+        schema = self.spark.table(ref.source_table).schema
+        return self.spark.read.format("orc").schema(schema).load(ref.ref)
 
     def cleanup_old(self, retention_days: int, now: datetime) -> list[str]:
         """Delete backup dirs whose modification time predates the cutoff
@@ -228,33 +196,22 @@ class PathBackupStrategy:
         different ``source_table`` is skipped — a shared backup_location
         can hold same-named tables from several databases."""
         cfg = self.config
-        marker = f"/{cfg.table}_backup_"
-        candidates: list[tuple[datetime, str]] = []
+        candidates = []
         for path, _ in self.fs.list_dirs(cfg.backup_location):
-            if marker not in path:
-                continue
-            try:
-                ts = datetime.strptime(path.rsplit(marker, 1)[1], _TS_FMT)
-            except ValueError:
-                continue
-            candidates.append((ts, path))
+            name = path.rsplit("/", 1)[-1]
+            ts = _backup_ts({}, name, cfg.table)
+            if name.startswith(f"{cfg.table}_backup_") and ts is not None:
+                candidates.append((ts, path))
         for ts, path in sorted(candidates, reverse=True):
-            source: str | None = None
-            parts: tuple[str, ...] = ()
             try:
-                manifest = self.fs.read_text(f"{path}/_manifest.txt")
-                for line in manifest.splitlines():
-                    key, _, value = line.partition("=")
-                    if key == "partitions":
-                        parts = tuple(p for p in value.split(",") if p)
-                    elif key == "source_table":
-                        source = value
+                manifest = dict(line.partition("=")[::2] for line in
+                                self.fs.read_text(f"{path}/_manifest.txt")
+                                .splitlines())
             except Exception:  # pragma: no cover - manifest best-effort
-                pass
-            if source is not None and source != cfg.qualified_table:
-                continue
-            return BackupRef(self.name, path, cfg.qualified_table,
-                             parts, ts)
+                manifest = {}
+            if manifest.get("source_table") in (None, cfg.qualified_table):
+                return BackupRef(self.name, path, cfg.qualified_table,
+                                 _split(manifest.get("partitions", "")), ts)
         return None
 
 
@@ -264,10 +221,9 @@ class BackupManager:
     def __init__(self, spark: SparkSession, config: EngineConfig):
         self.spark = spark
         self.config = config
-        if config.backup_strategy == "hive_table":
-            self.strategy = HiveTableBackupStrategy(spark, config)
-        else:
-            self.strategy = PathBackupStrategy(spark, config)
+        self.strategy = (HiveTableBackupStrategy
+                         if config.backup_strategy == "hive_table"
+                         else PathBackupStrategy)(spark, config)
 
     def create_backup(self, partitions: list[str],
                       now: datetime | None = None,

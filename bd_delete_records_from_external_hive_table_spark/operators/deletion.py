@@ -33,11 +33,9 @@ dynamic-partition write, so a task keeps one open writer however many
 partitions the job covers, and the one job commits once: there is no
 batch k failing after batches 1..k-1 committed.
 
-Metastore calls on the write path are set-at-a-time too: emptied
-partitions go in ONE multi-spec ``ALTER TABLE ... DROP`` where the
-reference issues one per partition (DeletionExecutor.java:164-214); only
-the per-partition location read remains, for lack of a multi-partition
-one in the public catalog API.
+Metastore calls are set-at-a-time too (``catalog.py``, where the reference
+runs a DESCRIBE and a DROP per partition, DeletionExecutor.java:164-214):
+one partition listing, one location listing, ONE DROP of all emptied ones.
 
 Deliberate deviations from reference quirks (SURVEY §2n "noted quirks"):
 the empty-retention fast path is decided **per partition** (the reference
@@ -55,15 +53,11 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from .. import catalog
 from ..config import EngineConfig
 from ..metrics import MetricsCollector, audit
-from ..partitions import (
-    filter_by_date_range,
-    in_list_predicate,
-    parse_partition_value,
-    partition_spec,
-    sort_chronologically,
-)
+from ..partitions import (filter_by_date_range, in_list_predicate,
+                          sort_chronologically)
 from ..sources.fs import HadoopFS
 
 __all__ = ["PartitionHandler", "DeletionExecutor", "PartitionPlan", "DeletionResult"]
@@ -122,18 +116,13 @@ class PartitionHandler:
         self.spark = spark
         self.config = config
 
-    def list_partitions(self) -> list[str]:
-        """SHOW PARTITIONS → partition values (PartitionHandler.java:63-74)."""
-        rows = self.spark.sql(
-            f"SHOW PARTITIONS {self.config.qualified_table}").collect()
-        return [parse_partition_value(r[0]) for r in rows]
-
     def candidate_partitions(self) -> list[str]:
-        """All partitions, driver-side date-range pruned when the config
-        carries a partition window (PartitionHandler.java:84-97). Partitions
-        with unparseable IDs are only skipped when a window is set; with no
-        window every partition is a candidate."""
-        parts = self.list_partitions()
+        """All partitions (PartitionHandler.java:63-74), driver-side
+        date-range pruned when the config carries a partition window
+        (PartitionHandler.java:84-97). Partitions with unparseable IDs are
+        only skipped when a window is set; with no window every partition
+        is a candidate."""
+        parts = catalog.partitions(self.spark, self.config.qualified_table)
         if self.config.partition_start or self.config.partition_end:
             parts = filter_by_date_range(
                 parts, self.config.partition_start, self.config.partition_end)
@@ -213,8 +202,7 @@ class DeletionExecutor:
             self._rewrite(rewritten, plan)
 
         for pid in dropped:
-            _total, matches = plan.counts[pid]
-            self.metrics.record_dropped_partition(pid, matches)
+            self.metrics.record_dropped_partition(pid, plan.counts[pid][1])
         self.metrics.partitions_dropped = len(dropped)
 
         deleted = self.metrics.records_deleted
@@ -299,46 +287,25 @@ class DeletionExecutor:
         External tables keep their directory after DROP PARTITION, so the
         files are removed explicitly (DeletionExecutor.java:251-269).
 
-        Set-at-a-time, where the reference loops DESCRIBE + DROP per
-        partition (DeletionExecutor.java:164-214): every location is
-        resolved first, then ONE ``ALTER TABLE ... DROP IF EXISTS
-        PARTITION (a), PARTITION (b), ...`` removes them all, then each
-        directory is deleted. Hive drops the specs one by one either way,
-        so the single statement is no less atomic than the loop; a failure
-        raises before any directory is touched. A directory that survives
-        its delete raises too (the reference only logs): after the DROP,
-        so the job's recovery restores the backup."""
+        Every location is read first, then one DROP removes all the
+        partitions, then each directory is deleted; a failure before the
+        directories raises with none of them touched. A directory that
+        survives its delete raises too (the reference only logs): after
+        the DROP, so the job's recovery restores the backup."""
         if not partitions:
             return []
-        cfg = self.config
-        specs = [partition_spec(cfg.partition_column, p) for p in partitions]
-        locations = [self._partition_location(spec) for spec in specs]
-        self.spark.sql(
-            f"ALTER TABLE {cfg.qualified_table} DROP IF EXISTS "
-            + ", ".join(f"PARTITION ({spec})" for spec in specs))
+        table = self.config.qualified_table
+        locations = catalog.locations(self.spark, table, partitions)
+        catalog.drop_partitions(self.spark, table,
+                                self.config.partition_column, partitions)
         fs = HadoopFS(self.spark)
-        for pid, location in zip(partitions, locations):
+        for pid in partitions:
+            location = locations.get(pid)
             if (location and not fs.delete(location, recursive=True)
                     and fs.exists(location)):
                 raise RuntimeError(
                     f"partition {pid}: directory {location} survived its "
                     f"delete")
-            audit("partition_dropped", table=cfg.qualified_table,
-                  partition=pid, location=location)
+            audit("partition_dropped", table=table, partition=pid,
+                  location=location)
         return list(partitions)
-
-    def _partition_location(self, spec: str) -> str | None:
-        """DESCRIBE FORMATTED ... PARTITION → Location
-        (DeletionExecutor.java:173-187). The catalog's answer, not a path
-        derived from the layout: a partition may live anywhere. The command
-        rows are collected raw and searched in Python — a DataFrame filter
-        on them would launch a Spark job per partition. The partition's
-        Location row precedes the table's."""
-        try:
-            rows = self.spark.sql(
-                f"DESCRIBE FORMATTED {self.config.qualified_table} "
-                f"PARTITION ({spec})").collect()
-        except Exception:
-            return None
-        return next((r[1] for r in rows if r[0] == "Location"), None)
-

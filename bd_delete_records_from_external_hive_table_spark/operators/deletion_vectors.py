@@ -147,13 +147,11 @@ class MergeOnReadDeleter:
     def _store_files(self) -> list[str]:
         return self.fs.list_files(self.dv_path)
 
-    def _read_store(self, files: list[str]) -> DataFrame | None:
-        return self.spark.read.parquet(*files) if files else None
-
     def tombstones(self) -> DataFrame | None:
         """Distinct tombstoned keys, or None when the store is empty."""
-        dv = self._read_store(self._store_files())
-        return None if dv is None else dv.select(*self.key_columns).distinct()
+        files = self._store_files()
+        return (self.spark.read.parquet(*files).select(*self.key_columns)
+                .distinct() if files else None)
 
     def read(self) -> DataFrame:
         """The logical (post-delete) table: base ANTI JOIN tombstones.
@@ -188,21 +186,18 @@ class MergeOnReadDeleter:
         cfg = self.config
         result = CompactionResult()
         files = self._store_files() if _files is None else list(_files)
-        snapshot = self._read_store(files)
-        if snapshot is None:
+        if not files:
             return result
+        snapshot = self.spark.read.parquet(*files)
         keys = snapshot.select(*self.key_columns).distinct()
         result.tombstones_applied = keys.count()
 
         # affected partitions from the store itself (recorded at delete
         # time) — no table scan needed to find them
-        part_col = (cfg.partition_column
-                    if cfg.partition_column in snapshot.columns
-                    else None)
-        if part_col is None:  # pragma: no cover - defensive
+        if cfg.partition_column not in snapshot.columns:  # pragma: no cover
             raise ValueError("tombstone store lacks the partition column")
-        affected = sorted(
-            r[0] for r in snapshot.select(part_col).distinct().collect())
+        affected = sorted(r[0] for r in snapshot.select(
+            cfg.partition_column).distinct().collect())
         if not affected:
             self._clear(files)
             return result

@@ -20,7 +20,6 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 from ..config import EngineConfig
 from ..metrics import audit
@@ -67,16 +66,16 @@ class RecoveryManager:
 
     def repair_metadata(self) -> None:
         """Drop Spark's cached file listing of the table after a write."""
-        self.spark.sql(f"REFRESH TABLE {self.config.qualified_table}")
+        self.spark.catalog.refreshTable(self.config.qualified_table)
 
     def _verify(self, ref: BackupRef) -> None:
         """Raise unless each backup partition holds the backup's rows."""
         pcol = self.config.partition_column
         source = self.spark.table(ref.source_table)
         restored = _fingerprints(source.where(in_list_predicate(
-            pcol, list(ref.partitions))), source.schema, pcol)
+            pcol, list(ref.partitions))), source.columns, pcol)
         backup = _fingerprints(
-            self.backups.strategy.read(ref), source.schema, pcol)
+            self.backups.strategy.read(ref), source.columns, pcol)
         bad = [p for p in ref.partitions if restored.get(p) != backup.get(p)]
         if bad:
             raise RuntimeError(
@@ -91,23 +90,19 @@ class RecoveryManager:
             return (f"-- No backup available for {t}.\n"
                     f"-- Restore from your own snapshot, then:\n"
                     f"REFRESH TABLE {t};")
-        if ref.strategy == "hive_table":
-            src = f"SELECT * FROM {ref.ref}"
-        else:
-            src = f"SELECT * FROM orc.`{ref.ref}`"
+        src = (f"SELECT * FROM {ref.ref}" if ref.strategy == "hive_table"
+               else f"SELECT * FROM orc.`{ref.ref}`")
         return ("-- Manual recovery runbook\n"
                 f"INSERT OVERWRITE TABLE {t} {src};\n"
                 f"REFRESH TABLE {t};")
 
 
-def _fingerprints(rows: DataFrame, schema: StructType,
+def _fingerprints(rows: DataFrame, columns: list[str],
                   pcol: str) -> dict[str, tuple[int, int]]:
-    """``{partition: (rows, sum of row hashes)}`` in one aggregation, cast
-    to the table's schema (a path backup infers numeric partition values).
+    """``{partition: (rows, sum of row hashes)}`` in one aggregation.
     32-bit hashes summed as bigint cannot overflow under ANSI mode."""
-    cols = [F.col(f.name).cast(f.dataType).alias(f.name) for f in schema]
-    out = (rows.select(*cols).groupBy(pcol)
+    out = (rows.groupBy(pcol)
            .agg(F.count(F.lit(1)).alias("n"),
-                F.sum(F.hash(*schema.names).cast("long")).alias("h"))
+                F.sum(F.hash(*columns).cast("long")).alias("h"))
            .collect())
     return {r[pcol]: (r["n"], r["h"]) for r in out}

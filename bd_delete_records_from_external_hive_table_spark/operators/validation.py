@@ -6,9 +6,9 @@ conditional-aggregate scan for (a)+(d) and one listing for (c) (C7):
 
 (a) retained count within ``expected ± tolerance%`` (ValidationManager.java:142-163)
 (c) partition structure intact for partitions expected to survive —
-    one ``SHOW PARTITIONS`` listing and a set-membership test, where the
-    reference probes ``SHOW PARTITIONS ... PARTITION(spec)`` once per
-    partition (DataIntegrityValidator.java:123-145)
+    one metastore listing (``catalog.partitions``) and a set-membership
+    test, where the reference probes ``SHOW PARTITIONS ... PARTITION(spec)``
+    once per partition (DataIntegrityValidator.java:123-145)
 (d) zero rows still match the criteria (ValidationManager.java:181-194)
 
 The reference's sampled check (b), no sampled row still matches
@@ -18,19 +18,16 @@ over the same rows, so (b) could never fail where (d) passed.
 
 from __future__ import annotations
 
-import logging
 from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
 
+from .. import catalog
 from ..config import EngineConfig
 from ..metrics import audit
 from ..partitions import in_list_predicate
-from .deletion import PartitionHandler
 
 __all__ = ["ValidationManager", "ValidationReport"]
-
-log = logging.getLogger(__name__)
 
 
 @dataclass
@@ -54,14 +51,13 @@ class ValidationManager:
     # -- pre-deletion -------------------------------------------------------
 
     def validate_pre_deletion(self) -> ValidationReport:
-        """Table exists and is readable (ValidationManager.java:110-117)."""
+        """Table exists (ValidationManager.java:110-117): one catalog
+        lookup, no SQL statement."""
         report = ValidationReport()
-        cfg = self.config
-        try:
-            self.spark.sql(f"DESCRIBE TABLE {cfg.qualified_table}").collect()
-            report.record("table_exists", True)
-        except Exception as exc:
-            report.record("table_exists", False, str(exc))
+        table = self.config.qualified_table
+        exists = self.spark.catalog.tableExists(table)
+        report.record("table_exists", exists,
+                      "" if exists else f"table {table} not found")
         return report
 
     # -- post-deletion ------------------------------------------------------
@@ -104,7 +100,7 @@ class ValidationManager:
 
         # (c) partition structure intact: one listing for all partitions
         if surviving_partitions:
-            listed = set(PartitionHandler(self.spark, cfg).list_partitions())
+            listed = set(catalog.partitions(self.spark, cfg.qualified_table))
             missing = [p for p in surviving_partitions if p not in listed]
             report.record("partition_structure", not missing,
                           f"missing={missing}")

@@ -1,4 +1,4 @@
-"""Partition-ID domain logic (pure Python, no Spark required).
+"""Partition-ID domain logic: pure functions of partition values.
 
 Re-expresses ``/root/reference/.../util/PartitionUtils.java`` — the richest
 driver-side component of the reference. Partition IDs are strings in three
@@ -21,7 +21,6 @@ import logging
 import re
 from datetime import date, datetime
 from enum import Enum
-from urllib.parse import unquote
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -29,7 +28,7 @@ from pyspark.sql import functions as F
 __all__ = [
     "PartitionType", "classify_partition", "parse_partition_date",
     "is_valid_partition", "filter_by_date_range", "sort_chronologically",
-    "in_list_predicate", "partition_spec", "parse_partition_value",
+    "in_list_predicate",
 ]
 
 log = logging.getLogger(__name__)
@@ -124,18 +123,3 @@ def in_list_predicate(partition_column: str, values: list[str]) -> Column:
     partition pruning both fire — only the listed partitions are scanned.
     """
     return F.col(partition_column).isin(values)
-
-
-def partition_spec(partition_column: str, value: str) -> str:
-    """Single-partition DDL spec ``col='value'`` (PartitionUtils.java:159-161)."""
-    escaped = value.replace("'", "''")
-    return f"{partition_column}='{escaped}'"
-
-
-def parse_partition_value(spec: str) -> str:
-    """Parse ``col=value`` from SHOW PARTITIONS output → value
-    (PartitionHandler.java:71). SHOW PARTITIONS prints the path-escaped
-    form (``history_20260101:a`` comes back as ``history_20260101%3Aa``);
-    undo it, or the value matches no row and its partition is never
-    scanned. Hive escapes ``%`` itself, so unquoting is exact."""
-    return unquote(spec.split("=", 1)[1] if "=" in spec else spec)

@@ -297,10 +297,11 @@ def test_null_safe_retention_keeps_null_rows(spark, table):
 def test_external_table_drop_removes_files_on_disk(spark, tmp_path, caplog):
     """The reference's core case: EXTERNAL tables keep their files after
     DROP PARTITION, so the engine must delete the directory itself
-    (DeletionExecutor.java:164-214,251-269). Two partitions empty in one
-    job, one of them at a custom location outside the table root: one
-    multi-spec DROP removes both, each directory is found through the
-    catalog and deleted, and the untouched partition's files survive."""
+    (DeletionExecutor.java:164-214,251-269). Three partitions empty in one
+    job, one at a custom location outside the table root and one whose
+    directory name is path-escaped: one multi-spec DROP removes all three,
+    each directory is found through the catalog and deleted, and the
+    untouched partition's files survive."""
     import logging
     import os
     loc = str(tmp_path / "ext_table")
@@ -318,9 +319,14 @@ def test_external_table_drop_removes_files_on_disk(spark, tmp_path, caplog):
         seed(spark, name, partition="20260212", ids=range(21, 31))
         seed(spark, name, partition="20260213")
         seed(spark, name, partition="20260214", ids=range(11, 21))
+        spark.sql(f"INSERT INTO {DB}.{name} PARTITION "
+                  f"(partition_id='history_20260212:a') VALUES "
+                  f"(31, 'User31', 'ACTIVE', TIMESTAMP '2026-02-12 09:00:00')")
         d13 = os.path.join(loc, "partition_id=20260213")
         d14 = os.path.join(loc, "partition_id=20260214")
+        escaped = os.path.join(loc, "partition_id=history_20260212%3Aa")
         assert os.path.isdir(d13) and os.path.isdir(d14)
+        assert os.path.isdir(escaped)
         assert os.listdir(elsewhere), "custom-location partition holds data"
 
         cfg = _cfg(name, DeletionCriteria(
@@ -329,9 +335,12 @@ def test_external_table_drop_removes_files_on_disk(spark, tmp_path, caplog):
         with caplog.at_level(logging.INFO, logger="bd_engine.audit"):
             outcome = DeletionJob(spark, cfg).run()
         assert outcome.success, outcome.error
-        assert outcome.result.partitions_dropped == ["20260212", "20260213"]
+        assert outcome.result.partitions_dropped == [
+            "20260212", "20260213", "history_20260212:a"]
 
         assert not os.path.exists(d13), "external partition dir must be deleted"
+        assert not os.path.exists(escaped), \
+            "path-escaped partition dir must be deleted"
         assert not os.path.exists(elsewhere), \
             "custom-location partition dir must be deleted"
         assert os.path.isdir(d14) and os.listdir(d14), \
@@ -339,7 +348,7 @@ def test_external_table_drop_removes_files_on_disk(spark, tmp_path, caplog):
         assert spark.table(f"{DB}.{name}").count() == 10
         drops = [m for m in caplog.messages
                  if m.startswith("partition_dropped ")]
-        assert len(drops) == 2
+        assert len(drops) == 3
         assert any('"20260212"' in m and elsewhere in m for m in drops)
         assert any('"20260213"' in m for m in drops)
     finally:
@@ -453,6 +462,43 @@ def test_path_backup_round_trip_with_manifest_and_retention(spark, table,
     assert len(removed) == 1 and "backup_20260201" in removed[0]
     assert not os.path.exists(old_dir)
     assert mgr.backup_count(ref) == 10  # fresh backup intact
+
+
+def test_path_backup_restores_a_leading_zero_partition_into_itself(
+        spark, table, tmp_path):
+    """A path backup is read back with the table's schema: partition
+    ``0213`` is not inferred as the number 213 and restored into a new
+    partition ``213``."""
+    spark.sql(f"INSERT INTO {DB}.{table} PARTITION (partition_id='0213') "
+              f"VALUES (1, 'User1', 'ACTIVE', TIMESTAMP '2026-02-13 09:00:00'),"
+              f" (2, 'User2', 'ACTIVE', TIMESTAMP '2026-02-13 10:00:00')")
+    mgr = BackupManager(spark, _cfg(
+        table, DeletionCriteria(where_clause="id = 1"), backup_enabled=True,
+        backup_strategy="path", backup_location=str(tmp_path / "backups")))
+    ref = mgr.create_backup(["0213"], now=datetime(2026, 2, 13, 12, 0, 0))
+    DeletionExecutor(spark, _cfg(table, DeletionCriteria(
+        where_clause="id >= 1"))).execute()
+    assert spark.table(f"{DB}.{table}").count() == 0
+    assert mgr.restore(ref) == 2
+    assert [r[0] for r in spark.sql(
+        f"SHOW PARTITIONS {DB}.{table}").collect()] == ["partition_id=0213"]
+    assert sorted((r.id, r.partition_id) for r in spark.table(
+        f"{DB}.{table}").collect()) == [(1, "0213"), (2, "0213")]
+
+
+def test_hive_backup_records_its_partition_list_exactly(spark, table):
+    """The backup's TBLPROPERTIES keep values with a quote or a backslash
+    intact, so ``latest_backup()`` names partitions that exist."""
+    parts = ["o'brien", "a\\b", "20260101"]
+    spark.createDataFrame(
+        [(i, f"User{i}", "ACTIVE", datetime(2026, 1, 1, 9), p)
+         for i, p in enumerate(parts)],
+        "id BIGINT, name STRING, status STRING, row_create_ts TIMESTAMP, "
+        "partition_id STRING").write.insertInto(f"{DB}.{table}")
+    mgr = BackupManager(spark, _cfg(
+        table, DeletionCriteria(where_clause="id = 1"), backup_enabled=True))
+    mgr.create_backup(parts, now=datetime(2026, 2, 13, 12, 0, 0))
+    assert mgr.latest_backup().partitions == tuple(parts)
 
 
 def test_hive_backup_retention_drops_only_old_own_backups(spark):
@@ -792,8 +838,7 @@ def test_failed_partition_dir_delete_fails_the_job_and_recovers(
         spark, external_table, tmp_path, monkeypatch, strategy):
     """An emptied partition's directory that survives its delete must not
     be reported as dropped: the job fails after the DROP and recovery
-    restores the exact pre-image. The path backup reads its partition
-    column back as a number; the restore check still matches it."""
+    restores the exact pre-image, under either backup strategy."""
     from bd_delete_records_from_external_hive_table_spark.sources.fs import HadoopFS
     name = external_table
     kw = ({"backup_strategy": "path",

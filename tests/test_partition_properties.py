@@ -11,14 +11,16 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from bd_delete_records_from_external_hive_table_spark.config import CriteriaValidationError, DeletionCriteria
+from bd_delete_records_from_external_hive_table_spark.catalog import (
+    parse_partition_value,
+    partition_spec,
+)
 from bd_delete_records_from_external_hive_table_spark.partitions import (
     PartitionType,
     classify_partition,
     filter_by_date_range,
     is_valid_partition,
     parse_partition_date,
-    parse_partition_value,
-    partition_spec,
     sort_chronologically,
 )
 

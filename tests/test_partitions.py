@@ -8,14 +8,16 @@ pattern classification (21-27, 65-74), date parsing (36-57), validity
 
 from datetime import date
 
+from bd_delete_records_from_external_hive_table_spark.catalog import (
+    parse_partition_value,
+    partition_spec,
+)
 from bd_delete_records_from_external_hive_table_spark.partitions import (
     PartitionType,
     classify_partition,
     filter_by_date_range,
     is_valid_partition,
     parse_partition_date,
-    parse_partition_value,
-    partition_spec,
     sort_chronologically,
 )
 

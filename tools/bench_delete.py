@@ -88,6 +88,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from bd_delete_records_from_external_hive_table_spark import catalog  # noqa: E402
 from bd_delete_records_from_external_hive_table_spark.config import (  # noqa: E402
     DeletionCriteria, EngineConfig)
 from bd_delete_records_from_external_hive_table_spark.job import DeletionJob  # noqa: E402
@@ -142,9 +143,8 @@ def build_table(spark) -> tuple[float, int, int]:
 def prune_evidence(spark, cfg: EngineConfig) -> dict:
     """Replicates PartitionHandler.analyze()'s scan and inspects its
     plan: at 100 TB the probe must read the windowed partitions only."""
-    handler = PartitionHandler(spark, cfg)
-    total = len(handler.list_partitions())
-    cands = handler.candidate_partitions()
+    total = len(catalog.partitions(spark, cfg.qualified_table))
+    cands = PartitionHandler(spark, cfg).candidate_partitions()
     pred = cfg.criteria.deletion_column(cfg.null_safe_retention)
     probe = (spark.table(cfg.qualified_table)
              .where(in_list_predicate(cfg.partition_column, cands))
