@@ -4,19 +4,22 @@ Partitions and locations come from Spark's ``SessionCatalog`` via py4j
 (``tests/test_catalog.py`` pins each call): ``SHOW PARTITIONS`` calls the
 same ``listPartitionNames``, and ONE ``listPartitions`` replaces a
 ``DESCRIBE FORMATTED ... PARTITION`` per partition (DeletionExecutor.java:
-173-187). The DROP stays SQL: Spark's command also refreshes the cached
-listing and clears stale statistics."""
+173-187). Backup retention reads every backup table's properties with
+``listTables`` (no temporary views) plus ONE ``getTablesByName``, where
+``SHOW TABLES`` plus a ``SHOW TBLPROPERTIES`` per backup grew with the
+backups kept. The DROP stays SQL: Spark's command also refreshes the
+cached listing and clears stale statistics. A backup table is created by
+one ``CREATE TABLE ... LIKE`` that carries its properties."""
 
 from __future__ import annotations
 
 from urllib.parse import unquote
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 
 __all__ = ["partitions", "locations", "drop_partitions", "partition_spec",
            "parse_partition_value", "tables_with_properties",
-           "set_properties", "drop_table"]
+           "create_table_like", "drop_table"]
 
 
 def _literal(value: str) -> str:
@@ -79,26 +82,32 @@ def drop_partitions(spark: SparkSession, table: str, partition_column: str,
 def tables_with_properties(spark: SparkSession, database: str,
                            pattern: str) -> list[tuple[str, dict[str, str]]]:
     """(name, TBLPROPERTIES) of the tables named like ``pattern``, matched
-    case-insensitively as Hive lowercases names. Rows are collected raw: a
-    DataFrame filter on them would launch a Spark job per table."""
+    case-insensitively as Hive lowercases names; temporary views are
+    skipped. One listing and one ``getTablesByName``: the metastore
+    returns every table with its properties in one call, and a table
+    dropped since the listing is left out."""
+    session_catalog = spark._jsparkSession.sessionState().catalog()
     out = []
-    for row in spark.sql(f"SHOW TABLES IN {database} "
-                         f"LIKE {_literal(pattern)}").collect():
-        if row.isTemporary:
-            continue
-        try:
-            props = dict(spark.sql(
-                f"SHOW TBLPROPERTIES {database}.{row.tableName}").collect())
-        except AnalysisException:  # pragma: no cover - dropped since listed
-            props = {}
-        out.append((row.tableName, props))
+    tables = session_catalog.getTablesByName(
+        session_catalog.listTables(database, pattern, False)).iterator()
+    while tables.hasNext():
+        table = tables.next()
+        props, entries = {}, table.properties().iterator()
+        while entries.hasNext():
+            entry = entries.next()
+            props[entry._1()] = entry._2()
+        out.append((table.identifier().table(), props))
     return out
 
 
-def set_properties(spark: SparkSession, table: str,
-                   properties: dict[str, str]) -> None:
-    spark.sql(f"ALTER TABLE {table} SET TBLPROPERTIES (" + ", ".join(
-        f"{_literal(k)}={_literal(v)}" for k, v in properties.items()) + ")")
+def create_table_like(spark: SparkSession, name: str, source: str,
+                      properties: dict[str, str]) -> None:
+    """An empty managed ORC table with ``source``'s columns and partition
+    columns, tagged with ``properties`` and nothing else. Raises
+    ``AnalysisException`` if ``name`` exists."""
+    spark.sql(f"CREATE TABLE {name} LIKE {source} USING orc TBLPROPERTIES ("
+              + ", ".join(f"{_literal(k)}={_literal(v)}"
+                          for k, v in properties.items()) + ")")
 
 
 def drop_table(spark: SparkSession, table: str) -> None:

@@ -13,11 +13,17 @@ HDFSBackupStrategy.java:83). A strategy keeps only what differs: where
 ``create`` writes the copy, how ``read`` loads it, ``cleanup_old`` and
 ``latest``.
 
-- **HiveTableBackupStrategy** — ``saveAsTable`` a partitioned ORC clone named
+- **HiveTableBackupStrategy** — a partitioned ORC clone named
   ``<table>_backup_<yyyyMMdd_HHmmss>`` tagged with TBLPROPERTIES
-  (HiveTableBackupStrategy.java:25-57); retention drops backup tables
-  older than N days (98-138). The tagging, the candidate listing with its
-  properties and the DROP are ``catalog.py``'s; none runs a Spark job.
+  (HiveTableBackupStrategy.java:25-57), made by one DDL and one insert:
+  ``CREATE TABLE ... LIKE <source> USING orc TBLPROPERTIES (...)``, then
+  ``insertInto``. The reference's ``saveAsTable`` is a CTAS that Spark
+  follows with a partition-repair listing, and its tagging a separate
+  ``ALTER TABLE ... SET TBLPROPERTIES``; this path runs neither. If the
+  insert fails, the table this call created is dropped. Retention drops
+  backup tables older than N days (98-138). The DDL, the candidate
+  listing with its properties and the DROP are ``catalog.py``'s; none
+  runs a Spark job.
 - **PathBackupStrategy** — partitioned ORC written to a filesystem path plus
   a ``_manifest.txt`` manifest (HDFSBackupStrategy.java:28-53,151-175 —
   the reference names it ``_metadata.txt``, but Spark's file index treats
@@ -27,16 +33,20 @@ HDFSBackupStrategy.java:83). A strategy keeps only what differs: where
   read back with the source table's schema: inference would read a
   partition ``0213`` as the number 213 and restore it into partition 213.
 
-Backup names have one-second resolution, so both strategies write with
-``mode("errorifexists")``: a second backup in the same second raises
-:class:`BackupError` before anything is written, instead of silently
-replacing the earlier backup's pre-image (the reference overwrites).
+Backup names have one-second resolution, so a second backup in the same
+second raises :class:`BackupError` before anything is written (the DDL
+fails on the existing table; the path write uses
+``mode("errorifexists")``), instead of silently replacing the earlier
+backup's pre-image (the reference overwrites). Both strategies record the
+partition list as JSON, so a value holding a comma stays one partition;
+``latest`` still reads the comma-joined lists of older backups.
 Timestamps for backup naming are injected (``now``) rather than read from a
 global clock so tests are deterministic.
 """
 
 from __future__ import annotations
 
+import json
 from dataclasses import dataclass
 from datetime import datetime, timedelta
 
@@ -84,12 +94,16 @@ class HiveTableBackupStrategy:
                now: datetime) -> BackupRef:
         cfg = self.config
         name = f"{cfg.qualified_table}_backup_{now.strftime(_TS_FMT)}"
-        (source.write.mode("errorifexists").format("orc")
-           .partitionBy(cfg.partition_column).saveAsTable(name))
-        catalog.set_properties(self.spark, name, {
+        catalog.create_table_like(self.spark, name, cfg.qualified_table, {
             "backup_source": cfg.qualified_table,
             "backup_timestamp": now.strftime(_TS_FMT),
-            "backup_partitions": ",".join(partitions)})
+            "backup_partitions": json.dumps(partitions)})
+        try:
+            source.write.insertInto(name)
+        except Exception as exc:
+            # the DDL above succeeded, so this call owns the table
+            catalog.drop_table(self.spark, name)
+            raise BackupError(f"backup not written: {exc}") from exc
         return BackupRef(self.name, name, cfg.qualified_table,
                          tuple(partitions), now)
 
@@ -128,11 +142,19 @@ class HiveTableBackupStrategy:
             return None
         ts, name, parts = max(found, key=lambda f: f[0])
         return BackupRef(self.name, f"{cfg.database}.{name}",
-                         cfg.qualified_table, _split(parts), ts)
+                         cfg.qualified_table, _partition_list(parts), ts)
 
 
-def _split(csv: str) -> tuple[str, ...]:
-    return tuple(p for p in csv.split(",") if p)
+def _partition_list(text: str) -> tuple[str, ...]:
+    """A recorded partition list: JSON, or comma-joined as backups made
+    before the JSON format recorded it."""
+    try:
+        parts = json.loads(text)
+    except ValueError:
+        parts = None
+    if isinstance(parts, list) and all(isinstance(p, str) for p in parts):
+        return tuple(parts)
+    return tuple(p for p in text.split(",") if p)
 
 
 def _backup_ts(props: dict[str, str], name: str,
@@ -169,7 +191,7 @@ class PathBackupStrategy:
         self.fs.write_text(f"{path}/_manifest.txt",
                            f"source_table={cfg.qualified_table}\n"
                            f"backup_timestamp={now.strftime(_TS_FMT)}\n"
-                           f"partitions={','.join(partitions)}")
+                           f"partitions={json.dumps(partitions)}")
         return BackupRef(self.name, path, cfg.qualified_table,
                          tuple(partitions), now)
 
@@ -210,8 +232,9 @@ class PathBackupStrategy:
             except Exception:  # pragma: no cover - manifest best-effort
                 manifest = {}
             if manifest.get("source_table") in (None, cfg.qualified_table):
+                parts = _partition_list(manifest.get("partitions", ""))
                 return BackupRef(self.name, path, cfg.qualified_table,
-                                 _split(manifest.get("partitions", "")), ts)
+                                 parts, ts)
         return None
 
 
@@ -242,8 +265,9 @@ class BackupManager:
         try:
             ref = self.strategy.create(source, partitions, now)
         except AnalysisException as exc:
-            # errorifexists: a backup taken in the same second already
-            # holds this name; nothing was written
+            # a backup taken in the same second already holds this name
+            # (the DDL or the errorifexists write failed); nothing was
+            # written
             raise BackupError(f"backup not created: {exc}") from exc
         backup_count = self.backup_count(ref)
         if backup_count != source_count:

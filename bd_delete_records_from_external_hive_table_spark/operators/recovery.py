@@ -84,17 +84,24 @@ class RecoveryManager:
 
     def manual_runbook(self, ref: BackupRef | None) -> str:
         """The manual-recovery SQL the reference prints
-        (RecoveryManager.java:136-153), without its MSCK line."""
+        (RecoveryManager.java:136-153), without its MSCK line. A path
+        backup is read with partition type inference off, which would
+        read partition ``0213`` as 213 and restore it into a new one."""
         t = self.config.qualified_table
         if ref is None:
             return (f"-- No backup available for {t}.\n"
                     f"-- Restore from your own snapshot, then:\n"
                     f"REFRESH TABLE {t};")
-        src = (f"SELECT * FROM {ref.ref}" if ref.strategy == "hive_table"
-               else f"SELECT * FROM orc.`{ref.ref}`")
-        return ("-- Manual recovery runbook\n"
-                f"INSERT OVERWRITE TABLE {t} {src};\n"
-                f"REFRESH TABLE {t};")
+        if ref.strategy == "hive_table":
+            insert = f"INSERT OVERWRITE TABLE {t} SELECT * FROM {ref.ref};\n"
+        else:
+            inference = "spark.sql.sources.partitionColumnTypeInference.enabled"
+            insert = (f"SET {inference}=false;\n"
+                      f"INSERT OVERWRITE TABLE {t} "
+                      f"SELECT * FROM orc.`{ref.ref}`;\n"
+                      f"RESET {inference};\n")
+        return ("-- Manual recovery runbook\n" + insert
+                + f"REFRESH TABLE {t};")
 
 
 def _fingerprints(rows: DataFrame, columns: list[str],

@@ -1,10 +1,10 @@
 """The metastore module's contract.
 
-``catalog.partitions`` and ``catalog.locations`` call Spark's private
-``SessionCatalog`` through py4j. These tests pin both calls against the
-installed PySpark: if the API drifts, they fail here instead of in a
-DELETE. The structure guard keeps every metastore statement in
-``catalog.py``.
+``catalog.partitions``, ``catalog.locations`` and
+``catalog.tables_with_properties`` call Spark's private ``SessionCatalog``
+through py4j. These tests pin each call against the installed PySpark:
+if the API drifts, they fail here instead of in a DELETE. The structure
+guard keeps every metastore statement in ``catalog.py``.
 """
 
 from __future__ import annotations
@@ -64,6 +64,34 @@ def test_drop_partitions_matches_quoted_and_backslashed_values(spark, table):
     catalog.drop_partitions(spark, f"{DB}.{table}", "partition_id",
                             ["o'brien", "a\\b"])
     assert catalog.partitions(spark, f"{DB}.{table}") == ["20260101"]
+
+
+def test_tables_with_properties_lists_tables_not_temporary_views(spark):
+    """``listTables`` matches a mixed-case pattern against the lowercased
+    stored names and skips a temporary view named like a backup;
+    ``getTablesByName`` returns each table's own properties."""
+    name = "Catalog_Props_Src"
+    tagged = f"{name}_backup_20260102_000000"
+    spark.sql(f"CREATE TABLE {DB}.{name}_backup_20260101_000000 (id BIGINT) "
+              f"STORED AS ORC")
+    catalog.create_table_like(spark, f"{DB}.{tagged}",
+                              f"{DB}.{name}_backup_20260101_000000",
+                              {"backup_source": "o'brien", "k": "a\\b"})
+    spark.sql(f"CREATE TEMPORARY VIEW {name}_backup_20260103_000000 "
+              f"AS SELECT 1 AS id")
+    try:
+        got = dict(catalog.tables_with_properties(spark, DB,
+                                                  f"{name}_backup_*"))
+        assert sorted(got) == [f"{name}_backup_20260101_000000".lower(),
+                               tagged.lower()]
+        assert got[tagged.lower()] == {"backup_source": "o'brien",
+                                       "k": "a\\b"}
+        assert "backup_source" not in got[
+            f"{name}_backup_20260101_000000".lower()]
+    finally:
+        spark.sql(f"DROP VIEW IF EXISTS {name}_backup_20260103_000000")
+        for t in (f"{name}_backup_20260101_000000", tagged):
+            spark.sql(f"DROP TABLE IF EXISTS {DB}.{t}")
 
 
 @pytest.mark.parametrize("module", [

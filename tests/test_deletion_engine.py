@@ -237,6 +237,40 @@ def test_probe_failure_conservative_path_still_deletes_and_backs_up(
     assert parts == ["partition_id=20260213"]
 
 
+def _analyze_jobs(spark, cfg: EngineConfig) -> int:
+    """Spark jobs one ``PartitionHandler.analyze()`` launches, with the
+    table's cached file listing dropped first, as every write does."""
+    from bd_delete_records_from_external_hive_table_spark.operators.deletion import (
+        PartitionHandler,
+    )
+    sc = spark.sparkContext
+    group = f"analyze-{next(_seq)}"
+    spark.catalog.refreshTable(cfg.qualified_table)
+    sc.setJobGroup(group, "partition analysis")
+    try:
+        PartitionHandler(spark, cfg).analyze()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_analysis_jobs_do_not_grow_with_the_partition_window(spark, table):
+    """A window of 40 partitions is listed on the driver like one of 4,
+    not by an extra Spark listing job."""
+    _seed_days(spark, table, range(1, 5))
+    crit = DeletionCriteria(where_clause="status = 'INACTIVE'")
+    few = _analyze_jobs(spark, _cfg(table, crit))
+    _seed_days(spark, table, range(5, 29))
+    spark.createDataFrame(
+        [(i, "u", "ACTIVE", datetime(2026, 2, d, 9), f"202602{d:02d}")
+         for d in range(1, 13) for i in range(2)],
+        "id BIGINT, name STRING, status STRING, row_create_ts TIMESTAMP, "
+        "partition_id STRING").write.insertInto(f"{DB}.{table}")
+    assert len(spark.sql(f"SHOW PARTITIONS {DB}.{table}").collect()) == 40
+    assert _analyze_jobs(spark, _cfg(table, crit)) == few
+
+
 def test_rewrite_metrics_use_write_time_observed_counts(spark, table):
     """The retained count is observe()d during the write pass. If the
     table changes between analyze and execute (concurrent writer), the
@@ -445,7 +479,7 @@ def test_path_backup_round_trip_with_manifest_and_retention(spark, table,
     assert os.path.exists(ref.ref.replace("file:", "") + "/_manifest.txt")
     manifest = open(ref.ref.replace("file:", "") + "/_manifest.txt").read()
     assert f"source_table={DB}.{table}" in manifest
-    assert "partitions=20260213" in manifest
+    assert 'partitions=["20260213"]' in manifest
 
     # wipe the partition, restore from the path backup
     DeletionExecutor(spark, _cfg(table, DeletionCriteria(
@@ -499,6 +533,79 @@ def test_hive_backup_records_its_partition_list_exactly(spark, table):
         table, DeletionCriteria(where_clause="id = 1"), backup_enabled=True))
     mgr.create_backup(parts, now=datetime(2026, 2, 13, 12, 0, 0))
     assert mgr.latest_backup().partitions == tuple(parts)
+
+
+@pytest.mark.parametrize("strategy", ["hive_table", "path"])
+def test_backup_keeps_a_partition_value_with_a_comma_whole(
+        spark, table, tmp_path, strategy):
+    """The partition list is recorded as JSON: ``a,b`` is one partition,
+    not the two partitions ``a`` and ``b``."""
+    spark.sql(f"INSERT INTO {DB}.{table} PARTITION (partition_id='a,b') "
+              f"VALUES (1, 'User1', 'ACTIVE', TIMESTAMP '2026-02-13 09:00:00')")
+    kw = ({"backup_strategy": "path",
+           "backup_location": str(tmp_path / "backups")}
+          if strategy == "path" else {})
+    mgr = BackupManager(spark, _cfg(
+        table, DeletionCriteria(where_clause="id = 1"), backup_enabled=True,
+        **kw))
+    mgr.create_backup(["a,b"], now=datetime(2026, 2, 13, 12, 0, 0))
+    assert mgr.latest_backup().partitions == ("a,b",)
+
+
+def test_latest_backup_reads_a_comma_joined_partition_list(spark, table,
+                                                           tmp_path):
+    """Backups made before the JSON format recorded their partitions
+    comma-joined; ``latest_backup()`` still reads them."""
+    seed(spark, table)
+    spark.sql(f"CREATE TABLE {DB}.{table}_backup_20260101_000000 (id BIGINT) "
+              f"STORED AS ORC TBLPROPERTIES ('backup_source'='{DB}.{table}', "
+              f"'backup_timestamp'='20260101_000000', "
+              f"'backup_partitions'='20251231,20260101')")
+    mgr = BackupManager(spark, _cfg(
+        table, DeletionCriteria(where_clause="id = 1"), backup_enabled=True))
+    assert mgr.latest_backup().partitions == ("20251231", "20260101")
+    old = tmp_path / "backups" / f"{table}_backup_20260101_000000"
+    old.mkdir(parents=True)
+    (old / "_manifest.txt").write_text(
+        f"source_table={DB}.{table}\nbackup_timestamp=20260101_000000\n"
+        f"partitions=20251231,20260101")
+    mgr = BackupManager(spark, _cfg(
+        table, DeletionCriteria(where_clause="id = 1"), backup_enabled=True,
+        backup_strategy="path", backup_location=str(tmp_path / "backups")))
+    assert mgr.latest_backup().partitions == ("20251231", "20260101")
+
+
+def test_failed_backup_insert_leaves_no_table_and_keeps_the_earlier_backup(
+        spark, table, monkeypatch):
+    """The backup table is created, then filled. When the insert fails,
+    the table this call created is dropped with its directory, the
+    failure is a ``BackupError``, and the earlier backup stays the
+    latest one."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from bd_delete_records_from_external_hive_table_spark.operators import backup
+    seed(spark, table)
+    mgr = BackupManager(spark, _cfg(
+        table, DeletionCriteria(where_clause="id = 5"), backup_enabled=True))
+    first = mgr.create_backup(["20260213"], now=datetime(2026, 2, 13, 12, 0))
+    real = backup.in_list_predicate
+    monkeypatch.setattr(backup, "in_list_predicate", lambda col, values: (
+        real(col, values)
+        & F.raise_error(F.lit("injected insert failure")).isNull()))
+    with pytest.raises(BackupError, match="injected insert failure"):
+        mgr.create_backup(["20260213"], now=datetime(2026, 2, 13, 13, 0),
+                          expected_count=10)
+    monkeypatch.undo()
+    assert [t.name for t in spark.catalog.listTables(DB)
+            if t.name.startswith(f"{table}_backup_")] == [
+        first.ref.split(".", 1)[1]]
+    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+    assert [d for d in os.listdir(os.path.join(warehouse, f"{DB}.db"))
+            if d.startswith(f"{table}_backup_")] == [first.ref.split(".", 1)[1]]
+    assert mgr.latest_backup() == first
+    assert mgr.backup_count(first) == 10
 
 
 def test_hive_backup_retention_drops_only_old_own_backups(spark):

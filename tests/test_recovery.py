@@ -84,6 +84,29 @@ def test_recovery_exhausts_retries_and_emits_runbook(spark, table):
     assert ref.ref in runbook
 
 
+def test_path_runbook_restores_a_leading_zero_partition_into_itself(
+        spark, table, tmp_path):
+    """The printed runbook reads a path backup with partition type
+    inference off: partition ``0213`` comes back as ``0213``, not 213."""
+    spark.sql(f"INSERT INTO {DB}.{table} PARTITION (partition_id='0213') "
+              f"VALUES (1, 'User1', 'ACTIVE', TIMESTAMP '2026-02-13 09:00:00')")
+    cfg = _cfg(table, DeletionCriteria(where_clause="id = 1"),
+               backup_enabled=True, backup_strategy="path",
+               backup_location=str(tmp_path / "backups"))
+    mgr = BackupManager(spark, cfg)
+    ref = mgr.create_backup(["0213"], now=datetime(2026, 2, 13, 12, 0))
+    spark.sql(f"ALTER TABLE {DB}.{table} DROP PARTITION (partition_id='0213')")
+    for statement in RecoveryManager(spark, cfg, mgr).manual_runbook(
+            ref).split(";\n"):
+        lines = [ln for ln in statement.splitlines()
+                 if not ln.startswith("--")]
+        if "".join(lines).strip():
+            spark.sql("\n".join(lines).rstrip(";"))
+    assert [r[0] for r in spark.sql(
+        f"SHOW PARTITIONS {DB}.{table}").collect()] == ["partition_id=0213"]
+    assert remaining_ids(spark, table) == [1]
+
+
 def test_recovery_disabled_returns_false_without_touching_table(spark, table):
     seed(spark, table)
     cfg = _cfg(table, DeletionCriteria(where_clause="id >= 1"),
