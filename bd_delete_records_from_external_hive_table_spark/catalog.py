@@ -2,7 +2,7 @@
 
 Partitions and locations come from Spark's ``SessionCatalog`` via py4j
 (``tests/test_catalog.py`` pins each call): ``SHOW PARTITIONS`` calls the
-same ``listPartitionNames``, and ONE ``listPartitions`` replaces a
+same ``listPartitionNames``, and ONE ``listPartitionsByFilter`` replaces a
 ``DESCRIBE FORMATTED ... PARTITION`` per partition (DeletionExecutor.java:
 173-187). Backup retention reads every backup table's properties with
 ``listTables`` (no temporary views) plus ONE ``getTablesByName``, where
@@ -18,7 +18,7 @@ from urllib.parse import unquote
 from pyspark.sql import SparkSession
 
 __all__ = ["partitions", "locations", "drop_partitions", "partition_spec",
-           "parse_partition_value", "tables_with_properties",
+           "in_list_sql", "parse_partition_value", "tables_with_properties",
            "create_table_like", "drop_table"]
 
 
@@ -28,16 +28,25 @@ def _literal(value: str) -> str:
     return "'" + value.replace("\\", "\\\\").replace("'", "''") + "'"
 
 
-def _list(spark: SparkSession, method: str, table: str):
+def _session_catalog(spark: SparkSession, table: str):
+    """(the ``SessionCatalog``, ``table``'s ``TableIdentifier``)."""
     state = spark._jsparkSession.sessionState()
-    ident = state.sqlParser().parseTableIdentifier(table)
-    return getattr(state.catalog(), method)(
-        ident, spark.sparkContext._jvm.scala.Option.empty())
+    return state.catalog(), state.sqlParser().parseTableIdentifier(table)
 
 
 def partition_spec(partition_column: str, value: str) -> str:
     """Single-partition DDL spec ``col='value'`` (PartitionUtils.java:159-161)."""
     return f"{partition_column}={_literal(value)}"
+
+
+def in_list_sql(column: str, values: list[str]) -> str:
+    """``column IN ('v1', ...)`` as SQL text: Spark parses it in one call,
+    where a ``Column.isin`` ships each value through py4j on its own. SQL
+    has no empty ``IN ()``; no values select nothing: ``false``."""
+    if not values:
+        return "false"
+    listed = ", ".join(map(_literal, values))
+    return f"`{column}` IN ({listed})"
 
 
 def parse_partition_value(name: str) -> str:
@@ -50,24 +59,34 @@ def parse_partition_value(name: str) -> str:
 def partitions(spark: SparkSession, table: str) -> list[str]:
     """Every partition value, from one call returning one string: escaped
     names hold no newline, and one py4j round trip beats one per name."""
-    names = _list(spark, "listPartitionNames", table).mkString("\n")
+    session_catalog, ident = _session_catalog(spark, table)
+    names = session_catalog.listPartitionNames(
+        ident, spark.sparkContext._jvm.scala.Option.empty()).mkString("\n")
     return [parse_partition_value(n) for n in names.split("\n") if n]
 
 
 def locations(spark: SparkSession, table: str,
               values: list[str]) -> dict[str, str]:
-    """``{value: directory}`` of the listed values that exist. The catalog's
-    location, not one derived from the layout: a partition may live
-    anywhere. Its ``java.net.URI`` escapes twice (``%253A``); Hadoop's
-    ``Path`` gives the real directory (``%3A``)."""
-    wanted, out = set(values), {}
+    """``{value: directory}`` of the listed values that exist. One
+    ``listPartitionsByFilter`` on ``IN (values)`` fetches only those
+    partitions; the filter comes from the analyzed ``WHERE`` of the table,
+    whose column reference the metastore filter and its in-memory re-check
+    both need. The catalog's location, not one derived from the layout: a
+    partition may live anywhere. Its ``java.net.URI`` escapes twice
+    (``%253A``); Hadoop's ``Path`` gives the real directory (``%3A``)."""
+    if not values:
+        return {}
+    session_catalog, ident = _session_catalog(spark, table)
+    column = session_catalog.getTableMetadata(ident) \
+        .partitionColumnNames().head()
+    where = spark.table(table).where(in_list_sql(column, values))
+    found = session_catalog.listPartitionsByFilter(
+        ident, where._jdf.queryExecution().analyzed().expressions())
     path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
-    listed = _list(spark, "listPartitions", table).iterator()
-    while listed.hasNext():
-        part = listed.next()
-        value = part.spec().values().head()
-        if value in wanted:
-            out[value] = path(part.location()).toString()
+    out, found = {}, found.iterator()
+    while found.hasNext():
+        part = found.next()
+        out[part.spec().values().head()] = path(part.location()).toString()
     return out
 
 

@@ -25,6 +25,8 @@ from enum import Enum
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from .catalog import in_list_sql
+
 __all__ = [
     "PartitionType", "classify_partition", "parse_partition_date",
     "is_valid_partition", "filter_by_date_range", "sort_chronologically",
@@ -121,5 +123,6 @@ def in_list_predicate(partition_column: str, values: list[str]) -> Column:
     Keeping this a comparison on the raw partition column (not an expression
     *of* it) is what lets Hive metastore partition pruning and Spark static
     partition pruning both fire — only the listed partitions are scanned.
+    Built from SQL text in one JVM call.
     """
-    return F.col(partition_column).isin(values)
+    return F.expr(in_list_sql(partition_column, values))

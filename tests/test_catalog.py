@@ -17,6 +17,7 @@ from pathlib import Path
 import pytest
 
 from bd_delete_records_from_external_hive_table_spark import catalog
+from bd_delete_records_from_external_hive_table_spark.partitions import in_list_predicate
 
 from .test_deletion_engine import DB, external_table, seed, seed_escaped, table  # noqa: F401
 
@@ -51,6 +52,67 @@ def test_locations_are_the_directories_on_disk(spark, external_table,
     assert {v: d.removeprefix("file:") for v, d in got.items()} == {
         "history_20260101:a": escaped, "20260212": elsewhere}
     assert os.listdir(escaped) and os.listdir(elsewhere)
+
+
+def _count_round_trips(spark, monkeypatch) -> list[int]:
+    """Counts the py4j commands Python sends the JVM from here on."""
+    client = spark.sparkContext._gateway._gateway_client
+    count, send = [0], client.send_command
+
+    def counting(*args, **kwargs):
+        count[0] += 1
+        return send(*args, **kwargs)
+    monkeypatch.setattr(client, "send_command", counting)
+    return count
+
+
+def test_in_list_predicate_is_one_jvm_call_and_prunes_exactly(
+        spark, table, monkeypatch):
+    """``Column.isin`` ships every value through py4j (~4 round trips
+    each); the SQL text is one call. ``'``, ``\\`` and ``,`` select exactly
+    their partitions, not the look-alikes, no values select nothing, and a
+    3-of-10 window fetches 3 partitions from the metastore."""
+    tricky = ["o'brien", "a\\b", "x,y"]
+    values = tricky + ["o", "brien", "ab", "a\\\\b", "x", "y", "20260101"]
+    spark.createDataFrame(
+        [(i, "u", "ACTIVE", datetime(2026, 1, 1), p)
+         for i, p in enumerate(values)],
+        "id BIGINT, name STRING, status STRING, row_create_ts TIMESTAMP, "
+        "partition_id STRING").write.insertInto(f"{DB}.{table}")
+    count = _count_round_trips(spark, monkeypatch)
+    in_list_predicate("partition_id", [f"v{i}" for i in range(200)])
+    assert count[0] <= 5
+    monkeypatch.undo()
+
+    def selected(wanted):
+        return sorted(r.partition_id for r in spark.table(f"{DB}.{table}")
+                      .where(in_list_predicate("partition_id", wanted))
+                      .collect())
+    for value in tricky:
+        assert selected([value]) == [value]
+    assert selected([]) == []
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source \
+        .HiveCatalogMetrics
+    metrics.reset()
+    assert selected(tricky) == sorted(tricky)
+    assert metrics.METRIC_PARTITIONS_FETCHED().getCount() == 3
+
+
+def test_locations_fetch_only_the_wanted_partitions(spark, external_table,
+                                                    monkeypatch):
+    """Two locations cost a fixed number of round trips, not ~5 for every
+    partition of the table."""
+    spark.createDataFrame(
+        [(i, "u", "ACTIVE", datetime(2026, 1, 1), f"202601{i:02d}")
+         for i in range(1, 41)],
+        "id BIGINT, name STRING, status STRING, row_create_ts TIMESTAMP, "
+        "partition_id STRING").write.insertInto(f"{DB}.{external_table}")
+    count = _count_round_trips(spark, monkeypatch)
+    got = catalog.locations(spark, f"{DB}.{external_table}",
+                            ["20260103", "20260140"])
+    assert count[0] <= 50
+    assert sorted(got) == ["20260103", "20260140"]
+    assert all(d.endswith(f"/partition_id={v}") for v, d in got.items())
 
 
 def test_drop_partitions_matches_quoted_and_backslashed_values(spark, table):
